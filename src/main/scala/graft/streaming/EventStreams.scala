@@ -218,6 +218,41 @@ object EventStreams {
       }
       .start()
 
+  /** Schema adoption, merge side (the legacy-LAYOUT adoption
+    * convention applied to WIDENED schemas — ADVICE r10): align an
+    * on-disk frame to the incoming batch's schema by defaulting
+    * columns the table was committed without — NULL for data columns;
+    * -1 for the version column, so adopted rows always LOSE version
+    * ties to any real batch instead of turning null-versioned
+    * (max_by drops all-null groups, which would null out untouched
+    * legacy keys). Columns the table has but the batch lacks still
+    * fail loudly — narrowing is a writer bug, not a migration.
+    */
+  private[graft] def alignTo(onDisk: DataFrame, target: DataFrame,
+                             versionCol: String): DataFrame =
+    target.schema.fields.foldLeft(onDisk) { (df, f) =>
+      if (df.columns.contains(f.name)) df
+      else df.withColumn(f.name,
+        (if (f.name == versionCol) lit(-1) else lit(null)).cast(f.dataType))
+    }
+
+  /** True when the batch carries columns the on-disk frame lacks — the
+    * widening event that flips the manifest's sticky `mixed` flag.
+    */
+  private def widens(onDisk: DataFrame, target: DataFrame): Boolean =
+    target.schema.fieldNames.exists(f => !onDisk.columns.contains(f))
+
+  /** Schema adoption, read side: default one column a committed table
+    * may pre-date (e.g. `carry_spans` on packing state, `n_tokens` on
+    * curation state). Only fills a WHOLLY absent column; tables with
+    * mixed-generation files surface the widened column with NULLs in
+    * pre-widening rows (the manifest reads merge schemas), which
+    * consumers default with coalesce where a semantic zero exists.
+    */
+  private[graft] def withColumnDefault(df: DataFrame, name: String,
+                                       default: org.apache.spark.sql.Column): DataFrame =
+    if (df.columns.contains(name)) df else df.withColumn(name, default)
+
   /** One micro-batch MERGE into a keyed parquet table, committed through
     * a MANIFEST — the object-store-safe commit protocol.
     *
@@ -265,6 +300,23 @@ object EventStreams {
     * Deletes on a delta table reconcile the touched buckets first, so
     * a takedown still removes every version of a key in one commit.
     *
+    * EAGER MERGE PLAN (one exchange): the touched buckets' current
+    * rows and the raw batch, both tagged with [[upsertBucketCol]], are
+    * hash-partitioned ONCE on the bucket into min(touched buckets,
+    * default parallelism) partitions ([[mergeByBucket]]); each task then
+    * resolves latest-per-key with the same `max_by(version)` arbitration
+    * as [[graft.operators.Load.upsertLatest]] (grouping on (bucket,
+    * keys), which that partitioning already satisfies, so no second
+    * exchange) and writes its rows straight out. Every bucket's rows
+    * land in exactly one task, so the bucket-partitioned write still
+    * produces EXACTLY ONE data file per touched bucket (the write opens
+    * one file per partition value per task).
+    * The zone-map read-back reuses the schema just written, so it
+    * launches no schema-inference job, and each fresh file's byte
+    * length comes from the listing of its `gen_<id>/__bucket=<b>/` dir.
+    * Delta merges, first commits and the legacy-flat migration keep
+    * their plans (compact the batch, `repartition(touched)`, write).
+    *
     * Exactly-once across foreachBatch replays: the manifest's batchId is
     * the applied-batch watermark (foreachBatch replays only the last
     * uncommitted batch, so one high-water mark is the whole ledger); a
@@ -275,41 +327,6 @@ object EventStreams {
     * pre-manifest `__bucket=*` dirs are adopted as the initial live set
     * (their `_commits/<id>` markers still honored for replay).
     */
-  /** Schema adoption, merge side (the legacy-LAYOUT adoption
-    * convention applied to WIDENED schemas — ADVICE r10): align an
-    * on-disk frame to the incoming batch's schema by defaulting
-    * columns the table was committed without — NULL for data columns;
-    * -1 for the version column, so adopted rows always LOSE version
-    * ties to any real batch instead of turning null-versioned
-    * (max_by drops all-null groups, which would null out untouched
-    * legacy keys). Columns the table has but the batch lacks still
-    * fail loudly — narrowing is a writer bug, not a migration.
-    */
-  private def alignTo(onDisk: DataFrame, target: DataFrame,
-                      versionCol: String): DataFrame =
-    target.schema.fields.foldLeft(onDisk) { (df, f) =>
-      if (df.columns.contains(f.name)) df
-      else df.withColumn(f.name,
-        (if (f.name == versionCol) lit(-1) else lit(null)).cast(f.dataType))
-    }
-
-  /** True when the batch carries columns the on-disk frame lacks — the
-    * widening event that flips the manifest's sticky `mixed` flag.
-    */
-  private def widens(onDisk: DataFrame, target: DataFrame): Boolean =
-    target.schema.fieldNames.exists(f => !onDisk.columns.contains(f))
-
-  /** Schema adoption, read side: default one column a committed table
-    * may pre-date (e.g. `carry_spans` on packing state, `n_tokens` on
-    * curation state). Only fills a WHOLLY absent column; tables with
-    * mixed-generation files surface the widened column with NULLs in
-    * pre-widening rows (the manifest reads merge schemas), which
-    * consumers default with coalesce where a semantic zero exists.
-    */
-  private[graft] def withColumnDefault(df: DataFrame, name: String,
-                                       default: org.apache.spark.sql.Column): DataFrame =
-    if (df.columns.contains(name)) df else df.withColumn(name, default)
-
   def mergeBatchIntoTable(batch: DataFrame, tableDir: String, keyCols: Seq[String],
                           versionCol: String, nBuckets: Int, batchId: Long,
                           retain: Int = 1, compactEvery: Int = 0,
@@ -317,7 +334,8 @@ object EventStreams {
                           statsCols: Option[Seq[String]] = None,
                           bloomCols: Option[Seq[String]] = None,
                           beforeCommit: () => Unit = () => (),
-                          beforeRename: () => Unit = () => ()): Unit = {
+                          beforeRename: () => Unit = () => (),
+                          beforeShardRename: Int => Unit = _ => ()): Unit = {
     import org.apache.hadoop.fs.Path
     require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
     val spark = batch.sparkSession
@@ -325,31 +343,27 @@ object EventStreams {
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // legacy exactly-once marker (tables last written by the dir-swap sink)
     if (fs.exists(new Path(new Path(table, "_commits"), batchId.toString))) return
-    val committed = latestManifest(fs, table)
-    if (committed.exists(_._1 >= batchId)) return // replayed batch: already merged
+    // the head manifest, listed and read ONCE: every contract below
+    // parses from this one body
+    val head = manifestList(fs, table).lastOption.map(manifestAt(fs, _))
+    if (head.exists(_.batchId >= batchId)) return // replayed batch: already merged
     // sticky mixed-schema flag: once a widening merge commits, narrow
     // files may linger in untouched buckets, so readers must merge
     // schemas until the table is rebuilt (conservative, rare)
-    val mixed = manifestList(fs, table).lastOption.exists(manifestMixed(fs, _))
+    val mixed = head.exists(_.mixed)
     // a table with committed delta history carries its reconcile spec
     // in the manifest; the spec is the table's key contract — a merge
     // under different keys/version would corrupt every resolution
-    val prevReconcile = manifestList(fs, table).lastOption
-      .flatMap(manifestReconcile(fs, _))
+    val prevReconcile = head.flatMap(_.reconcile)
     // stats contract: sticky like the key contract — None inherits the
     // table's recorded columns, Some(cols) sets/overrides, Some(Nil)
     // drops zone maps for commits from here on
-    val effStatsCols = statsCols.getOrElse(
-      manifestList(fs, table).lastOption
-        .flatMap(manifestStatsCols(fs, _)).getOrElse(Seq.empty))
+    val effStatsCols = statsCols.getOrElse(head.flatMap(_.statsCols).getOrElse(Seq.empty))
     // bloom contract: sticky exactly like statsCols
-    val effBloomCols = bloomCols.getOrElse(
-      manifestList(fs, table).lastOption
-        .flatMap(manifestBloomCols(fs, _)).getOrElse(Seq.empty))
+    val effBloomCols = bloomCols.getOrElse(head.flatMap(_.bloomCols).getOrElse(Seq.empty))
     // column-id contract: carried verbatim (only renameColumn and the
     // materializing fold rewrite it); old-era bucket reads translate
-    val prevColIds = manifestList(fs, table).lastOption
-      .flatMap(manifestColIds(fs, _))
+    val prevColIds = head.flatMap(_.colIds)
     prevReconcile.foreach { case (ks, v) =>
       require(ks == keyCols && v == versionCol,
         s"$tableDir has delta history keyed (${ks.mkString(",")}) " +
@@ -363,7 +377,7 @@ object EventStreams {
     // where point reads never look. Only the FULL rewrite
     // ([[compactUpsertTable]], which re-hashes every row) may change
     // the count.
-    manifestList(fs, table).lastOption.map(readNBuckets(fs, _)).foreach { rec =>
+    head.map(_.nBuckets).foreach { rec =>
       require(rec == nBuckets,
         s"$tableDir is committed with nBuckets=$rec; this merge passed " +
           s"$nBuckets — incremental writes cannot re-bucket (touched " +
@@ -378,21 +392,20 @@ object EventStreams {
     // the ADVICE-r10 cuts tables use — adopted rows take version -1 and
     // lose ties to any real batch); re-versioning onto an EXISTING
     // column stays refused (that is the accident this guard exists for).
-    manifestList(fs, table).lastOption
-      .flatMap(manifestVersionedBy(fs, _)).foreach { v =>
-        if (v != versionCol) {
-          val onDisk = committed.map(_._2).getOrElse(Map.empty)
-            .values.flatten.headOption.map { f =>
-              readFilesTranslated(spark, table, prevColIds, Seq(f),
-                mergeSchema = false).schema.fieldNames.toSet
-            }.getOrElse(Set.empty[String])
-          require(!onDisk.contains(versionCol),
-            s"$tableDir records version contract '$v'; this merge's " +
-              s"'$versionCol' is an existing column — one version " +
-              "contract per table (re-version onto a NEW column, or " +
-              "rebuild)")
-        }
+    head.flatMap(_.versionedBy).foreach { v =>
+      if (v != versionCol) {
+        val onDisk = head.map(_.live).getOrElse(Map.empty)
+          .values.flatten.headOption.map { f =>
+            readFilesTranslated(spark, table, prevColIds, Seq(f),
+              mergeSchema = false).schema.fieldNames.toSet
+          }.getOrElse(Set.empty[String])
+        require(!onDisk.contains(versionCol),
+          s"$tableDir records version contract '$v'; this merge's " +
+            s"'$versionCol' is an existing column — one version " +
+            "contract per table (re-version onto a NEW column, or " +
+            "rebuild)")
       }
+    }
     // maintenance cadence (round-11 debt #2): a sink that opted into
     // compaction (`compactEvery > 0`) HEALS a flagged table on its next
     // merge — every live bucket joins the touched set, so the whole
@@ -406,7 +419,7 @@ object EventStreams {
 
     // live file set: the committed manifest, or (first manifest commit
     // on an older table) the pre-manifest __bucket=* dirs adopted as-is
-    val live: Map[Int, Seq[String]] = committed.map(_._2).getOrElse {
+    val live: Map[Int, Seq[String]] = head.map(_.live).getOrElse {
       if (!fs.exists(table)) Map.empty
       else fs.listStatus(table)
         .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$upsertBucketCol="))
@@ -419,10 +432,11 @@ object EventStreams {
         }.toMap
     }
 
+    val bucketOf = pmod(hash(keyCols.map(col): _*), lit(nBuckets))
     // compact the batch to one row per key, tagged with its bucket
     val compacted = graft.operators.Load.upsertLatest(
         batch, batch.limit(0), keyCols, versionCol)
-      .withColumn(upsertBucketCol, pmod(hash(keyCols.map(col): _*), lit(nBuckets)))
+      .withColumn(upsertBucketCol, bucketOf)
     // migration: a table written by the pre-bucketed (flat) sink layout
     // has root-level part files — fold the WHOLE flat table into this
     // merge; the files become unreferenced by the published manifest and
@@ -436,7 +450,7 @@ object EventStreams {
       else {
         val legacy = spark.read.option("mergeSchema", "true")
           .parquet(legacyFiles.map(_.getPath.toString).toIndexedSeq: _*)
-          .withColumn(upsertBucketCol, pmod(hash(keyCols.map(col): _*), lit(nBuckets)))
+          .withColumn(upsertBucketCol, bucketOf)
         // folded wholly into this merge, so legacy widening does not
         // leave narrow files behind: no flag flip needed here
         graft.operators.Load.upsertLatest(
@@ -452,18 +466,17 @@ object EventStreams {
     // or a homogenizing heal must still rewrite, so those merges run
     // eager even on a delta-opted sink (rare, one-shot by construction)
     val effectiveDelta = delta && legacyFiles.isEmpty && !homogenize
-    val (newLive, freshFiles) =
-      if (touched.isEmpty) (live, Seq.empty[String]) // empty batch: manifest advances the watermark only
+    // (new live set, fresh file -> byte length, the schema they were written with)
+    val (newLive, fresh, written) =
+      if (touched.isEmpty) (live, Map.empty[String, Long], None) // empty batch: manifest advances the watermark only
       else {
         // current state of ONLY the touched buckets, by explicit file
         // list from the manifest (never a directory listing); leaf-file
         // reads carry no partition column, so the bucket is recomputed
         // from the keys (deterministic)
         val currentRels = touched.toSeq.flatMap(live.get).flatten
-        val currentFiles = currentRels
-          .map(rel => new Path(table, rel).toString)
-        val merged =
-          if (effectiveDelta || currentFiles.isEmpty) {
+        val out: DataFrame =
+          if (effectiveDelta || currentRels.isEmpty) {
             // a widening merge can still strand narrow files in
             // untouched (or, delta: unread) buckets; probe one live
             // footer for the sticky-flag decision. Compare WITHOUT the
@@ -480,7 +493,7 @@ object EventStreams {
                   mergeSchema = false),
                 toMerge.drop(upsertBucketCol))))
               widenedThisBatch = true
-            toMerge
+            toMerge.repartition(touched.length, col(upsertBucketCol)) // one file per bucket per merge
           } else {
             val raw = readFilesTranslated(spark, table, prevColIds,
               currentRels, mergeSchema = mixed || legacyFiles.nonEmpty)
@@ -489,43 +502,59 @@ object EventStreams {
             // win a (version, ·) tie against its own later commit
             val current = prevReconcile.map { case (ks, v) =>
                 reconcileRows(raw, ks, v) }.getOrElse(raw)
-              .withColumn(upsertBucketCol, pmod(hash(keyCols.map(col): _*), lit(nBuckets)))
+              .withColumn(upsertBucketCol, bucketOf)
             if (widens(current, toMerge)) widenedThisBatch = true
-            graft.operators.Load.upsertLatest(
-              alignTo(current, toMerge, versionCol), toMerge, keyCols, versionCol)
+            if (legacyFiles.nonEmpty)
+              graft.operators.Load.upsertLatest(
+                  alignTo(current, toMerge, versionCol), toMerge, keyCols, versionCol)
+                .repartition(touched.length, col(upsertBucketCol))
+            else {
+              // the raw batch joins the single exchange: the per-key
+              // aggregate compacts it and merges it in one pass
+              val incoming = batch.withColumn(upsertBucketCol, bucketOf)
+              mergeByBucket(alignTo(current, incoming, versionCol), incoming,
+                keyCols, versionCol,
+                math.min(touched.length, spark.sparkContext.defaultParallelism))
+            }
           }
         val genName = s"gen_$batchId"
         val genDir = new Path(table, genName)
         markInFlight(fs, table, batchId)
-        merged
-          .repartition(touched.length, col(upsertBucketCol)) // one file per bucket per merge
-          .write.mode("overwrite").partitionBy(upsertBucketCol).parquet(genDir.toString)
+        out.write.mode("overwrite").partitionBy(upsertBucketCol).parquet(genDir.toString)
         val rewritten = touched.flatMap { b =>
           val d = new Path(genDir, s"$upsertBucketCol=$b")
           if (!fs.exists(d)) None
           else {
             val fls = fs.listStatus(d)
               .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-              .map(f => s"$genName/$upsertBucketCol=$b/${f.getPath.getName}").toSeq
+              .map(f => s"$genName/$upsertBucketCol=$b/${f.getPath.getName}" -> f.getLen).toSeq
             if (fls.isEmpty) None else Some(b -> fls)
           }
         }.toMap
-        val out =
+        val rewrittenRels = rewritten.map { case (b, fls) => b -> fls.map(_._1) }
+        val outLive =
           if (effectiveDelta)
             // APPEND on the touched buckets' lists — the bucket's prior
             // files stay live and the new ones stack on top (commit order
             // recovered from the gen_<id> path segment at read)
-            live ++ rewritten.map { case (b, fls) =>
+            live ++ rewrittenRels.map { case (b, fls) =>
               b -> (live.getOrElse(b, Seq.empty) ++ fls) }
-          else (live -- touched) ++ rewritten
-        (out, rewritten.values.flatten.toSeq)
+          else (live -- touched) ++ rewrittenRels
+        (outLive, rewritten.values.flatten.toMap,
+          Some(StructType(out.schema.filterNot(_.name == upsertBucketCol))))
       }
     // zone maps for this commit's new files (one aggregate over exactly
-    // those files; carried files keep their shard-recorded stats)
-    val freshStats: FileStats =
+    // those files, read under the schema they were just written with —
+    // no inference job; carried files keep their shard-recorded stats),
+    // plus each fresh file's byte length from the listing above
+    val zoneMaps: FileStats =
       if (effStatsCols.isEmpty && effBloomCols.isEmpty) Map.empty
-      else computeFileStats(spark, table, freshFiles, effStatsCols,
-        effBloomCols)
+      else computeFileStats(spark, table, fresh.keys.toSeq, effStatsCols,
+        effBloomCols, written)
+    val freshStats: FileStats = fresh.map { case (rel, len) =>
+      rel -> (zoneMaps.getOrElse(rel, Map.empty) +
+        (statsBytesKey -> ((Some(len.toString), Some(len.toString)))))
+    }
     // a homogenizing merge rewrote EVERY live bucket under the batch's
     // schema — no narrow file can remain (even if this batch widened
     // again), so the flag drops in this same commit
@@ -550,12 +579,13 @@ object EventStreams {
       keyedBy = Some(keyCols), fileStats = freshStats,
       statsCols = if (effStatsCols.nonEmpty) Some(effStatsCols) else None,
       bloomCols = if (effBloomCols.nonEmpty) Some(effBloomCols) else None,
-      base = Some(committed.map(_._1)),
-      statsTz = resolveStatsTz(spark, fs, table,
+      base = Some(head.map(_.batchId)),
+      statsTz = resolveStatsTz(spark, table, head.flatMap(_.statsTz),
         effStatsCols.nonEmpty || effBloomCols.nonEmpty),
       beforeRename = beforeRename,
       colIds = prevColIds,
-      versionedBy = Some(versionCol))
+      versionedBy = Some(versionCol),
+      beforeShardRename = beforeShardRename)
     sweepUnreferenced(fs, table, retainedFiles(fs, table, retain))
     // bound the manifest chain (every manifest is a full snapshot; see
     // compactManifests) — keeps `_manifests/` listing O(compactEvery)
@@ -569,6 +599,29 @@ object EventStreams {
     // opt-in also enables the mixed-schema healing rewrite above.
     if (compactEvery > 0 && manifestList(fs, table).size > compactEvery)
       compactManifests(spark, tableDir, math.max(retain, compactEvery))
+  }
+
+  /** The eager merge aggregate in ONE exchange: `current ∪ incoming`
+    * (both carrying [[upsertBucketCol]]) hash-partitioned on the bucket
+    * into `nParts` partitions, then one row per key — the row with the
+    * highest `versionCol`, the [[graft.operators.Load.upsertLatest]]
+    * arbitration (`max_by` over a struct, so `incoming` may repeat a
+    * key). Grouping on (bucket, keys) is satisfied by the bucket
+    * partitioning, so the aggregate adds no exchange, and every bucket's
+    * rows stay in one partition. Columns come out keys first, then the
+    * others in `current`'s order, then the bucket.
+    */
+  private def mergeByBucket(current: DataFrame, incoming: DataFrame,
+                            keyCols: Seq[String], versionCol: String,
+                            nParts: Int): DataFrame = {
+    val all = current.unionByName(incoming)
+    val group = upsertBucketCol +: keyCols
+    val others = all.columns.filterNot(group.contains).toSeq
+    all.repartition(nParts, col(upsertBucketCol))
+      .groupBy(group.map(col): _*)
+      .agg(max_by(struct(others.map(col): _*), col(versionCol)).as("__r"))
+      .select(keyCols.map(col) ++ others.map(c => col(s"__r.`$c`").as(c)) :+
+        col(upsertBucketCol): _*)
   }
 
   /** Committed DELETE from a keyed upsert table — the takedown
@@ -594,11 +647,12 @@ object EventStreams {
     val table = new Path(tableDir)
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(new Path(new Path(table, "_commits"), batchId.toString))) return
-    val committed = latestManifest(fs, table)
-    if (committed.exists(_._1 >= batchId)) return // replayed batch
+    // the head manifest, listed and read once (as in the merge)
+    val head = manifestList(fs, table).lastOption.map(manifestAt(fs, _))
+    if (head.exists(_.batchId >= batchId)) return // replayed batch
     // same bucket-count guard as the merge (round 17): an incremental
     // delete under a different count would probe the wrong buckets
-    manifestList(fs, table).lastOption.map(readNBuckets(fs, _)).foreach { rec =>
+    head.map(_.nBuckets).foreach { rec =>
       require(rec == nBuckets,
         s"$tableDir is committed with nBuckets=$rec; this delete passed " +
           s"$nBuckets — incremental writes cannot re-bucket; " +
@@ -610,7 +664,7 @@ object EventStreams {
     // manifest that omits them would let the post-commit sweep DELETE
     // them — so they fail fast: run one merge (which folds them into
     // buckets) before deleting.
-    val live: Map[Int, Seq[String]] = committed.map(_._2).getOrElse {
+    val live: Map[Int, Seq[String]] = head.map(_.live).getOrElse {
       if (!fs.exists(table)) Map.empty
       else {
         require(!fs.listStatus(table).exists(s =>
@@ -630,9 +684,8 @@ object EventStreams {
           }.toMap
       }
     }
-    val mixed = manifestList(fs, table).lastOption.exists(manifestMixed(fs, _))
-    val prevReconcile = manifestList(fs, table).lastOption
-      .flatMap(manifestReconcile(fs, _))
+    val mixed = head.exists(_.mixed)
+    val prevReconcile = head.flatMap(_.reconcile)
     // barrier: the key frame feeds the touched-bucket collect AND the
     // anti-join (two consumers, the curateShard rule)
     val delKeys = keys.select(keyCols.map(col): _*).distinct()
@@ -644,9 +697,7 @@ object EventStreams {
     val (newLive, delFresh) =
       if (touched.isEmpty) (live, Seq.empty[String])
       else {
-        val delColIds = manifestList(fs, table).lastOption
-          .flatMap(manifestColIds(fs, _))
-        val raw = readFilesTranslated(spark, table, delColIds,
+        val raw = readFilesTranslated(spark, table, head.flatMap(_.colIds),
           touched.toSeq.flatMap(live.get).flatten, mergeSchema = mixed)
         // delta history reconciles FIRST: the delete folds the touched
         // buckets unique-keyed, so every version of a removed key dies
@@ -690,10 +741,8 @@ object EventStreams {
       }
     // zone maps: a delete inherits the table's stats contract (it must
     // not silently drop the pruning the table opted into)
-    val delStatsCols = manifestList(fs, table).lastOption
-      .flatMap(manifestStatsCols(fs, _)).getOrElse(Seq.empty)
-    val delBloomCols = manifestList(fs, table).lastOption
-      .flatMap(manifestBloomCols(fs, _)).getOrElse(Seq.empty)
+    val delStatsCols = head.flatMap(_.statsCols).getOrElse(Seq.empty)
+    val delBloomCols = head.flatMap(_.bloomCols).getOrElse(Seq.empty)
     val delStats: FileStats =
       if (delStatsCols.isEmpty && delBloomCols.isEmpty) Map.empty
       else computeFileStats(spark, table, delFresh, delStatsCols,
@@ -706,12 +755,11 @@ object EventStreams {
       keyedBy = Some(keyCols), fileStats = delStats,
       statsCols = if (delStatsCols.nonEmpty) Some(delStatsCols) else None,
       bloomCols = if (delBloomCols.nonEmpty) Some(delBloomCols) else None,
-      base = Some(committed.map(_._1)),
-      statsTz = resolveStatsTz(spark, fs, table,
+      base = Some(head.map(_.batchId)),
+      statsTz = resolveStatsTz(spark, table, head.flatMap(_.statsTz),
         delStatsCols.nonEmpty || delBloomCols.nonEmpty),
       beforeRename = beforeRename,
-      colIds = manifestList(fs, table).lastOption
-        .flatMap(manifestColIds(fs, _)))
+      colIds = head.flatMap(_.colIds))
     sweepUnreferenced(fs, table, retainedFiles(fs, table, retain))
   }
 
@@ -762,7 +810,7 @@ object EventStreams {
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val manifest = manifestList(fs, table).lastOption.getOrElse(
       return (0, false))
-    val covers = manifestStatsCols(fs, manifest).exists(cs =>
+    val covers = manifestAt(fs, manifest).statsCols.exists(cs =>
       bounds.forall(b => cs.contains(b.column)))
     val allFiles = readManifest(fs, manifest)._2.values.flatten.toSeq
     if (allFiles.isEmpty) return (0, covers)
@@ -806,9 +854,9 @@ object EventStreams {
         else if (counts.exists(_.isEmpty)) None
         else Some(counts.flatten.map(_.toLong).sum)
       (id, kind.getOrElse("write"), base.flatten,
-        readNBuckets(fs, p), files.size.toLong, nRows,
-        manifestMixed(fs, p), manifestReconcile(fs, p).isDefined,
-        manifestKeyedBy(fs, p).map(_.mkString(",")))
+        manifestAt(fs, p).nBuckets, files.size.toLong, nRows,
+        manifestAt(fs, p).mixed, manifestAt(fs, p).reconcile.isDefined,
+        manifestAt(fs, p).keyedBy.map(_.mkString(",")))
     }.toDF("batch_id", "kind", "base", "n_buckets", "n_files", "n_rows",
       "mixed", "reconcile", "keyed_by")
   }
@@ -874,16 +922,16 @@ object EventStreams {
           "(which migrates legacy layouts) before deleteUpsertTableWhere"))
     val (prevId, live) = readManifest(fs, manifest)
     if (prevId >= batchId) return None // replayed batch
-    val nBuckets = readNBuckets(fs, manifest)
-    val mixed = manifestMixed(fs, manifest)
-    val prevReconcile = manifestReconcile(fs, manifest)
-    val keyCols = manifestKeyedBy(fs, manifest).getOrElse(
+    val nBuckets = manifestAt(fs, manifest).nBuckets
+    val mixed = manifestAt(fs, manifest).mixed
+    val prevReconcile = manifestAt(fs, manifest).reconcile
+    val keyCols = manifestAt(fs, manifest).keyedBy.getOrElse(
       throw new IllegalStateException(
         s"$tableDir's manifest records no key contract (pre-r14 writer); " +
           "predicate deletes re-bucket rewritten rows by key — run one " +
           "merge so the table adopts it"))
-    val delStatsCols = manifestStatsCols(fs, manifest).getOrElse(Seq.empty)
-    val delBloomCols = manifestBloomCols(fs, manifest).getOrElse(Seq.empty)
+    val delStatsCols = manifestAt(fs, manifest).statsCols.getOrElse(Seq.empty)
+    val delBloomCols = manifestAt(fs, manifest).bloomCols.getOrElse(Seq.empty)
     val allFiles = live.values.flatten.toSeq
     val zero = DeleteWhereReport(batchId, 0, 0, allFiles.size, 0)
     def commit(newLive: Map[Int, Seq[String]], touched: Seq[Int],
@@ -902,15 +950,15 @@ object EventStreams {
         // partition the bucket's rows) — fsck's delta_spec_present
         // reads it to tell the legal mix from a lost reconcile spec
         kind = Some("delete"),
-        statsTz = resolveStatsTz(spark, fs, table,
+        statsTz = resolveStatsTz(spark, table, manifestAt(fs, manifest).statsTz,
           delStatsCols.nonEmpty || delBloomCols.nonEmpty),
-        colIds = manifestColIds(fs, manifest))
+        colIds = manifestAt(fs, manifest).colIds)
       sweepUnreferenced(fs, table, retainedFiles(fs, table, retain))
     }
     if (allFiles.isEmpty) { commit(live, Seq.empty, Seq.empty); return Some(zero) }
     // LOGICAL schema (era-translated): bounds name current columns
     val schema = readFilesTranslated(spark, table,
-      manifestColIds(fs, manifest), Seq(allFiles.head),
+      manifestAt(fs, manifest).colIds, Seq(allFiles.head),
       mergeSchema = false).schema
     val typed = bounds.map { b =>
       require(schema.fieldNames.contains(b.column),
@@ -976,7 +1024,7 @@ object EventStreams {
     // names, and the survivors land current-named under this commit's
     // ordinal
     def scan(rels: Seq[String]) = readFilesTranslated(spark, table,
-      manifestColIds(fs, manifest), rels, mergeSchema = mixed)
+      manifestAt(fs, manifest).colIds, rels, mergeSchema = mixed)
     val survivorParts = Seq(
       if (plainRewrite.isEmpty) None else Some(scan(plainRewrite).filter(keep)),
       if (deltaRewrite.isEmpty) None
@@ -1114,9 +1162,9 @@ object EventStreams {
                          batchId: Long): Option[Seq[String]] = {
     val table = new org.apache.hadoop.fs.Path(tableDir)
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    manifestList(fs, table).map(p => (p, manifestBatchId(fs, p)))
+    manifestList(fs, table).map(p => (p, manifestAt(fs, p).batchId))
       .filter(_._2 < batchId).lastOption
-      .flatMap(p => manifestKeyedBy(fs, p._1))
+      .flatMap(p => manifestAt(fs, p._1).keyedBy)
   }
 
   private def pointReadAtManifest(spark: SparkSession, tableDir: String,
@@ -1127,11 +1175,11 @@ object EventStreams {
                                   keyCols: Seq[String]): DataFrame = {
     import org.apache.hadoop.fs.Path
     val (_, live) = readManifest(fs, manifest)
-    val nBuckets = readNBuckets(fs, manifest)
+    val nBuckets = manifestAt(fs, manifest).nBuckets
     // probing a PARTIAL key would hash into the wrong buckets and read
     // empty where rows exist — when the manifest records its key
     // contract (every r14+ writer), a mismatched probe fails loudly
-    manifestKeyedBy(fs, manifest).foreach(ks =>
+    manifestAt(fs, manifest).keyedBy.foreach(ks =>
       require(ks == keyCols,
         s"$tableDir is keyed (${ks.mkString(",")}); a point read on " +
           s"(${keyCols.mkString(",")}) would hash into the wrong buckets"))
@@ -1162,8 +1210,8 @@ object EventStreams {
     // [min, max] never open (within-bucket file pruning is only sound
     // on reconcile-free snapshots — the readUpsertTableWhere rule).
     // Metadata stays O(wanted buckets): only their shards' stats read.
-    val statCols = manifestStatsCols(fs, manifest).getOrElse(Seq.empty)
-    val zonePrunable = manifestReconcile(fs, manifest).isEmpty &&
+    val statCols = manifestAt(fs, manifest).statsCols.getOrElse(Seq.empty)
+    val zonePrunable = manifestAt(fs, manifest).reconcile.isEmpty &&
       keyCols.nonEmpty && keyCols.forall(statCols.contains) &&
       keyCols.forall(c => statSupported(schema(c).dataType))
     val scanSet =
@@ -1264,36 +1312,24 @@ object EventStreams {
     * The guard multi-commit operations use to decide, on replay,
     * whether a half of their commit pair already landed.
     */
-  def appliedBatch(spark: SparkSession, tableDir: String): Option[Long] = {
-    import org.apache.hadoop.fs.Path
-    val table = new Path(tableDir)
-    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    latestManifest(fs, table).map(_._1)
-  }
+  def appliedBatch(spark: SparkSession, tableDir: String): Option[Long] =
+    headManifest(spark, tableDir).map(_.batchId)
 
   /** The live (bucket -> data files) map of the latest committed
     * manifest — empty for pre-manifest tables. Exposed for inspection
     * and tests (e.g. asserting a merge left untouched buckets'
     * files byte-identical).
     */
-  def tableManifest(spark: SparkSession, tableDir: String): Map[Int, Seq[String]] = {
-    import org.apache.hadoop.fs.Path
-    val table = new Path(tableDir)
-    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    latestManifest(fs, table).map(_._2).getOrElse(Map.empty)
-  }
+  def tableManifest(spark: SparkSession, tableDir: String): Map[Int, Seq[String]] =
+    headManifest(spark, tableDir).map(_.live).getOrElse(Map.empty)
 
   /** The newest committed batchId of an upsert table, None if nothing
     * has committed. Exposed for train-once guards (a builder that must
     * refuse to overwrite an existing committed model — Models q161/q166
     * — checks this before merging) and for tests.
     */
-  def latestCommittedBatchId(spark: SparkSession, tableDir: String): Option[Long] = {
-    import org.apache.hadoop.fs.Path
-    val table = new Path(tableDir)
-    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    latestManifest(fs, table).map(_._1)
-  }
+  def latestCommittedBatchId(spark: SparkSession, tableDir: String): Option[Long] =
+    headManifest(spark, tableDir).map(_.batchId)
 
   private def manifestsDir(table: org.apache.hadoop.fs.Path) =
     new org.apache.hadoop.fs.Path(table, "_manifests")
@@ -1310,25 +1346,6 @@ object EventStreams {
       .map(_.getPath).sortBy(_.getName).toSeq
   }
 
-  /** Parse one manifest: (batchId, bucket -> table-relative data file
-    * paths). TWO shapes exist (round 13 sharded the metadata):
-    *
-    *   - SHARDED (current writer): the list file carries per-bucket
-    *     POINTERS (`"shards":{"<b>":"<shard file>"}`) into
-    *     `_manifests/shards/`, each shard file holding one bucket's
-    *     full live-file list. A commit rewrites only the touched
-    *     buckets' shard files plus the tiny list — O(changed) metadata
-    *     per commit instead of re-serializing every live file of every
-    *     bucket (the pre-r13 design's one super-linear term at 100 TB).
-    *     Shard files are IMMUTABLE and shared across lists.
-    *   - LEGACY inline (`"buckets":{...}` with the file arrays in the
-    *     list body): adopted transparently on read; the first new
-    *     commit writes the sharded shape (all buckets, once).
-    *
-    * The JSON is this sink's own writer format (no escapes needed —
-    * paths are `gen_<id>/__bucket=<b>/part-*.parquet`), parsed with
-    * regexes rather than a JSON dependency.
-    */
   /** IN-FLIGHT STAGING TOKENS (optimistic concurrency): a writer drops
     * `_inflight/<batchId>` BEFORE staging its generation dir and
     * [[publishManifest]] removes it after the commit rename, so a
@@ -1375,45 +1392,175 @@ object EventStreams {
     }
   }
 
+  /** A whole small metadata file (manifest list, shard, token) as text. */
+  private def readText(fs: org.apache.hadoop.fs.FileSystem,
+                       p: org.apache.hadoop.fs.Path): String = {
+    val in = fs.open(p)
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  }
+
+  /** `"a","b"` (the body of a writer-format JSON string array) as a Seq. */
+  private def quotedList(s: String): Seq[String] =
+    if (s.isEmpty) Seq.empty
+    else s.split(",").map(_.stripPrefix("\"").stripSuffix("\"")).toSeq
+
+  /** One committed manifest list, its body read ONCE: every field below
+    * parses lazily from that same body, so a caller that needs several
+    * of them (a merge reads mixed, reconcile, the contracts and the live
+    * set of the head) pays one listing and one small-object read.
+    *
+    * TWO shapes exist (round 13 sharded the metadata):
+    *   - SHARDED (current writer): the list file carries per-bucket
+    *     POINTERS (`"shards":{"<b>":"<shard file>"}`) into
+    *     `_manifests/shards/`, each shard file holding one bucket's
+    *     full live-file list. A commit rewrites only the touched
+    *     buckets' shard files plus the tiny list — O(changed) metadata
+    *     per commit instead of re-serializing every live file of every
+    *     bucket (the pre-r13 design's one super-linear term at 100 TB).
+    *     Shard files are IMMUTABLE and shared across lists.
+    *   - LEGACY inline (`"buckets":{...}` with the file arrays in the
+    *     list body): adopted transparently on read; the first new
+    *     commit writes the sharded shape (all buckets, once).
+    *
+    * The JSON is this sink's own writer format (no escapes needed —
+    * paths are `gen_<id>/__bucket=<b>/part-*.parquet`), parsed with
+    * regexes rather than a JSON dependency.
+    */
+  private final class Manifest(fs: org.apache.hadoop.fs.FileSystem,
+                               val path: org.apache.hadoop.fs.Path) {
+    lazy val body: String = readText(fs, path)
+    private def first(re: String): Option[String] =
+      re.r.findFirstMatchIn(body).map(_.group(1))
+    private def list(field: String): Option[Seq[String]] =
+      first(s""""$field":\\[([^\\]]*)\\]""").map(quotedList)
+
+    lazy val batchId: Long = first(""""batchId":(-?\d+)""")
+      .getOrElse(throw new IllegalStateException(s"malformed manifest $path")).toLong
+    lazy val nBuckets: Int = first(""""nBuckets":(\d+)""").map(_.toInt)
+      .getOrElse(throw new IllegalStateException(s"manifest $path lacks nBuckets"))
+    /** See [[manifestCommitMeta]]. */
+    lazy val base: Option[Option[Long]] = first(""""base":(-?\d+)""")
+      .map(b => Some(b.toLong).filter(_ != -1L))
+    lazy val kind: Option[String] = first(""""kind":"([a-z_]+)"""")
+    /** Does this manifest mark the table's live set as MIXED-schema —
+      * i.e. some committed file pre-dates a schema widening? Set sticky
+      * by the first widening merge; readers pay the parquet schema-merge
+      * only for flagged snapshots (unflagged tables read one footer, the
+      * common case — the ADVICE-r10 adoption without a per-read tax).
+      */
+    lazy val mixed: Boolean = body.contains(""""mixed":1""")
+    /** The RECONCILE spec — present iff the snapshot may hold more than
+      * one row per key (DELTA merges committed since the last full
+      * fold): `(key columns, version column)`. Readers resolve the
+      * latest row per key with it ([[reconcileRows]]); its absence is
+      * the contract that every live bucket is unique-keyed and reads
+      * are a plain scan (the eager-merge fast path). Carried
+      * manifest-to-manifest once set; dropped by [[compactUpsertTable]]
+      * and by a homogenizing full rewrite, which fold every delta away.
+      */
+    lazy val reconcile: Option[(Seq[String], String)] =
+      """"reconcile":\{"keys":\[([^\]]*)\],"version":"([^"]+)"\}""".r
+        .findFirstMatchIn(body).map(m => (quotedList(m.group(1)), m.group(2)))
+    /** The KEY CONTRACT — the key columns the table's commits merge on,
+      * recorded by every writer since r14 (`"keyedBy":[...]`). Distinct
+      * from the reconcile spec: `keyedBy` is pure metadata (no read-path
+      * cost — eager tables never reconcile), present so point-read and
+      * audit paths can PROVE a probe key is the table's whole key
+      * instead of guessing; legacy manifests lack it and those paths
+      * fall back to full scans. None for pre-r14 manifests.
+      */
+    lazy val keyedBy: Option[Seq[String]] = list("keyedBy")
+    /** See [[versionedTag]]. */
+    lazy val versionedBy: Option[String] = first(""""versionedBy":"([^"]+)"""")
+    /** The STATS CONTRACT — the columns whose per-file min/max every
+      * commit since the contract was set records. Sticky like the key
+      * contract: merges/deletes/compactions inherit it by default, so a
+      * nightly fold never silently drops the pruning a table opted
+      * into. None for tables that never opted in.
+      */
+    lazy val statsCols: Option[Seq[String]] = list("statsCols").filter(_.nonEmpty)
+    /** See [[tableBloomCols]]. */
+    lazy val bloomCols: Option[Seq[String]] = list("bloomCols")
+    /** The TIME ZONE the table's zone-map stats render in — recorded
+      * by every stats-bearing commit since r15, because timestamp stats
+      * are `date_format`-rendered WALL CLOCKS: a probe rendered in a
+      * different zone compares offset strings and can prune files that
+      * hold matching rows (silently wrong results). The contract is ONE
+      * zone per table: writers require their session zone to match the
+      * recorded one (a full [[compactUpsertTable]] recomputes every
+      * file's stats and may ADOPT a new zone); readers render timestamp
+      * probes in the RECORDED zone, so reads are exact from any session.
+      * None for pre-r15 manifests (readers fall back to the session
+      * zone — the pre-r15 behavior).
+      */
+    lazy val statsTz: Option[String] = first(""""statsTz":"([^"]+)"""")
+    /** See [[ColIds]]. */
+    lazy val colIds: Option[ColIds] = {
+      val start = body.indexOf(""""colIds":{""")
+      if (start < 0) None
+      else {
+        val open = body.indexOf('{', start)
+        var depth = 0; var i = open; var end = -1
+        while (i < body.length && end < 0) {
+          body(i) match {
+            case '{' => depth += 1
+            case '}' => depth -= 1; if (depth == 0) end = i
+            case _ =>
+          }
+          i += 1
+        }
+        val sub = body.substring(open, if (end < 0) body.length else end + 1)
+        val entry = """"(\d+)":\[((?:\[[^\]]*\],?)*)\]""".r
+        val pair = """\["([^"]*)",(-?\d+)\]""".r
+        val m = entry.findAllMatchIn(sub).map { e =>
+          e.group(1).toInt -> pair.findAllMatchIn(e.group(2))
+            .map(p => (p.group(1), p.group(2).toLong)).toSeq
+        }.toMap
+        if (m.isEmpty) None else Some(m)
+      }
+    }
+    /** A sharded list's (bucket -> shard file name) pointer map, parsed
+      * WITHOUT touching the shard files — what pointer reuse and shard
+      * GC cost. None for legacy inline lists.
+      */
+    lazy val shardPointers: Option[Map[Int, String]] = {
+      val shardIdx = body.indexOf(shardedTag)
+      if (shardIdx < 0) None
+      else Some(""""(\d+)":"([^"]+)"""".r.findAllMatchIn(body.substring(shardIdx))
+        .map(m => m.group(1).toInt -> m.group(2)).toMap)
+    }
+    /** bucket -> table-relative data files: sharded lists resolve each
+      * pointer's shard file, legacy inline lists parse the body.
+      */
+    lazy val live: Map[Int, Seq[String]] = shardPointers match {
+      case Some(ptrs) =>
+        val shardsDir = new org.apache.hadoop.fs.Path(path.getParent, shardsDirName)
+        ptrs.map { case (b, name) =>
+          b -> readShardFiles(fs, new org.apache.hadoop.fs.Path(shardsDir, name)) }
+      case None =>
+        """"(\d+)":\[([^\]]*)\]""".r.findAllMatchIn(body)
+          .map(m => m.group(1).toInt -> quotedList(m.group(2))).toMap
+    }
+  }
+
+  private def manifestAt(fs: org.apache.hadoop.fs.FileSystem,
+                         p: org.apache.hadoop.fs.Path): Manifest = new Manifest(fs, p)
+
+  /** The table's newest committed manifest, if any. */
+  private def headManifest(spark: SparkSession, tableDir: String): Option[Manifest] = {
+    val table = new org.apache.hadoop.fs.Path(tableDir)
+    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    manifestList(fs, table).lastOption.map(manifestAt(fs, _))
+  }
+
   private def readManifest(fs: org.apache.hadoop.fs.FileSystem,
                            p: org.apache.hadoop.fs.Path): (Long, Map[Int, Seq[String]]) = {
-    val in = fs.open(p)
-    val s = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    val batchId = """"batchId":(-?\d+)""".r.findFirstMatchIn(s)
-      .getOrElse(throw new IllegalStateException(s"malformed manifest $p"))
-      .group(1).toLong
-    val shardIdx = s.indexOf(shardedTag)
-    val buckets =
-      if (shardIdx >= 0) {
-        val shardsDir = new org.apache.hadoop.fs.Path(p.getParent, shardsDirName)
-        """"(\d+)":"([^"]+)"""".r.findAllMatchIn(s.substring(shardIdx)).map { m =>
-          m.group(1).toInt ->
-            readShardFiles(fs, new org.apache.hadoop.fs.Path(shardsDir, m.group(2)))
-        }.toMap
-      } else
-        """"(\d+)":\[([^\]]*)\]""".r.findAllMatchIn(s).map { m =>
-          val fls = if (m.group(2).isEmpty) Seq.empty[String]
-          else m.group(2).split(",").map(_.stripPrefix("\"").stripSuffix("\"")).toSeq
-          m.group(1).toInt -> fls
-        }.toMap
-    (batchId, buckets)
+    val m = manifestAt(fs, p)
+    (m.batchId, m.live)
   }
 
   private val shardedTag = "\"shards\":{"
   private val shardsDirName = "shards"
-
-  /** A manifest's batchId WITHOUT resolving its shard files — one tiny
-    * read. The zero-padded filename also encodes it; the body is the
-    * source of truth.
-    */
-  private def manifestBatchId(fs: org.apache.hadoop.fs.FileSystem,
-                              p: org.apache.hadoop.fs.Path): Long = {
-    val in = fs.open(p)
-    val s = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    """"batchId":(-?\d+)""".r.findFirstMatchIn(s)
-      .getOrElse(throw new IllegalStateException(s"malformed manifest $p"))
-      .group(1).toLong
-  }
 
   /** (batchId, base watermark the commit was computed from, commit
     * kind) from one manifest body — the metadata triple the change
@@ -1424,84 +1571,16 @@ object EventStreams {
     */
   private def manifestCommitMeta(fs: org.apache.hadoop.fs.FileSystem,
                                  p: org.apache.hadoop.fs.Path): (Long, Option[Option[Long]], Option[String]) = {
-    val in = fs.open(p)
-    val s = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    val id = """"batchId":(-?\d+)""".r.findFirstMatchIn(s)
-      .getOrElse(throw new IllegalStateException(s"malformed manifest $p"))
-      .group(1).toLong
-    val base = """"base":(-?\d+)""".r.findFirstMatchIn(s)
-      .map(m => m.group(1).toLong match {
-        case -1L => None
-        case b => Some(b)
-      })
-    val kind = """"kind":"([a-z_]+)"""".r.findFirstMatchIn(s).map(_.group(1))
-    (id, base, kind)
+    val m = manifestAt(fs, p)
+    (m.batchId, m.base, m.kind)
   }
 
   /** One manifest shard: a single bucket's live-file list. */
   private def readShardFiles(fs: org.apache.hadoop.fs.FileSystem,
-                             p: org.apache.hadoop.fs.Path): Seq[String] = {
-    val in = fs.open(p)
-    val s = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    """"files":\[([^\]]*)\]""".r.findFirstMatchIn(s).map { m =>
-      if (m.group(1).isEmpty) Seq.empty[String]
-      else m.group(1).split(",").map(_.stripPrefix("\"").stripSuffix("\"")).toSeq
-    }.getOrElse(throw new IllegalStateException(s"malformed manifest shard $p"))
-  }
-
-  /** A sharded list's (bucket -> shard file name) pointer map, read
-    * WITHOUT touching the shard files (one tiny-object read) — what
-    * pointer reuse and shard GC cost. None for legacy inline lists.
-    */
-  private def readShardPointers(fs: org.apache.hadoop.fs.FileSystem,
-                                p: org.apache.hadoop.fs.Path): Option[Map[Int, String]] = {
-    val in = fs.open(p)
-    val s = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    val shardIdx = s.indexOf(shardedTag)
-    if (shardIdx < 0) None
-    else Some(""""(\d+)":"([^"]+)"""".r.findAllMatchIn(s.substring(shardIdx))
-      .map(m => m.group(1).toInt -> m.group(2)).toMap)
-  }
-
-  /** The manifest's RECONCILE spec — present iff the snapshot may hold
-    * more than one row per key (DELTA merges committed since the last
-    * full fold): `(key columns, version column)`. Readers resolve the
-    * latest row per key with it ([[reconcileRows]]); its absence is the
-    * contract that every live bucket is unique-keyed and reads are a
-    * plain scan (the eager-merge fast path). Carried manifest-to-
-    * manifest once set; dropped by [[compactUpsertTable]] and by a
-    * homogenizing full rewrite, which fold every delta away.
-    */
-  private def manifestReconcile(fs: org.apache.hadoop.fs.FileSystem,
-                                p: org.apache.hadoop.fs.Path): Option[(Seq[String], String)] = {
-    val in = fs.open(p)
-    val s = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    """"reconcile":\{"keys":\[([^\]]*)\],"version":"([^"]+)"\}""".r
-      .findFirstMatchIn(s).map { m =>
-        val ks =
-          if (m.group(1).isEmpty) Seq.empty[String]
-          else m.group(1).split(",").map(_.stripPrefix("\"").stripSuffix("\"")).toSeq
-        (ks, m.group(2))
-      }
-  }
-
-  /** The manifest's KEY CONTRACT — the key columns the table's commits
-    * merge on, recorded by every writer since r14 (`"keyedBy":[...]`).
-    * Distinct from the reconcile spec: `keyedBy` is pure metadata (no
-    * read-path cost — eager tables never reconcile), present so
-    * point-read and audit paths can PROVE a probe key is the table's
-    * whole key instead of guessing; legacy manifests lack it and those
-    * paths fall back to full scans. None for pre-r14 manifests.
-    */
-  private def manifestKeyedBy(fs: org.apache.hadoop.fs.FileSystem,
-                              p: org.apache.hadoop.fs.Path): Option[Seq[String]] = {
-    val in = fs.open(p)
-    val s = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    """"keyedBy":\[([^\]]*)\]""".r.findFirstMatchIn(s).map { m =>
-      if (m.group(1).isEmpty) Seq.empty[String]
-      else m.group(1).split(",").map(_.stripPrefix("\"").stripSuffix("\"")).toSeq
-    }
-  }
+                             p: org.apache.hadoop.fs.Path): Seq[String] =
+    """"files":\[([^\]]*)\]""".r.findFirstMatchIn(readText(fs, p))
+      .map(m => quotedList(m.group(1)))
+      .getOrElse(throw new IllegalStateException(s"malformed manifest shard $p"))
 
   private def keyedTag(keyedBy: Option[Seq[String]]): String =
     keyedBy.map(ks =>
@@ -1520,45 +1599,26 @@ object EventStreams {
   private def versionedTag(versionedBy: Option[String]): String =
     versionedBy.map(v => s""","versionedBy":"$v"""").getOrElse("")
 
-  private def manifestVersionedBy(fs: org.apache.hadoop.fs.FileSystem,
-                                  p: org.apache.hadoop.fs.Path): Option[String] = {
-    val in = fs.open(p)
-    val s = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    """"versionedBy":"([^"]+)"""".r.findFirstMatchIn(s).map(_.group(1))
-  }
-
   /** The latest manifest's recorded version contract, if any. */
-  def tableVersionedBy(spark: SparkSession, tableDir: String): Option[String] = {
-    val table = new org.apache.hadoop.fs.Path(tableDir)
-    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    manifestList(fs, table).lastOption.flatMap(manifestVersionedBy(fs, _))
-  }
+  def tableVersionedBy(spark: SparkSession, tableDir: String): Option[String] =
+    headManifest(spark, tableDir).flatMap(_.versionedBy)
 
   /** The latest manifest's reconcile spec (delta tables), if any. */
   private[graft] def tableReconcileSpec(spark: SparkSession,
-                                        tableDir: String): Option[(Seq[String], String)] = {
-    val table = new org.apache.hadoop.fs.Path(tableDir)
-    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    manifestList(fs, table).lastOption.flatMap(manifestReconcile(fs, _))
-  }
+                                        tableDir: String): Option[(Seq[String], String)] =
+    headManifest(spark, tableDir).flatMap(_.reconcile)
 
   /** The latest manifest's bucket count, if the table is committed. */
   private[graft] def tableNBuckets(spark: SparkSession,
-                                   tableDir: String): Option[Int] = {
-    val table = new org.apache.hadoop.fs.Path(tableDir)
-    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    manifestList(fs, table).lastOption.map(readNBuckets(fs, _))
-  }
+                                   tableDir: String): Option[Int] =
+    headManifest(spark, tableDir).map(_.nBuckets)
 
   /** The latest committed manifest's key contract, if recorded —
     * what [[readUpsertTableForKeys]] validates against and what
     * audits use to decide a table is safely bucket-prunable.
     */
-  def tableKeyedBy(spark: SparkSession, tableDir: String): Option[Seq[String]] = {
-    val table = new org.apache.hadoop.fs.Path(tableDir)
-    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    manifestList(fs, table).lastOption.flatMap(manifestKeyedBy(fs, _))
-  }
+  def tableKeyedBy(spark: SparkSession, tableDir: String): Option[Seq[String]] =
+    headManifest(spark, tableDir).flatMap(_.keyedBy)
 
   private def reconcileTag(reconcile: Option[(Seq[String], String)]): String =
     reconcile.map { case (ks, v) =>
@@ -1683,15 +1743,19 @@ object EventStreams {
     * map-side partials; the collect is one row per new file, bounded by
     * the commit's file count. Columns a file's schema lacks (pre-
     * widening) get no entry — readers treat missing stats as
-    * unprunable, the conservative direction.
+    * unprunable, the conservative direction. `schema`, when the caller
+    * just wrote the files from one frame, is that frame's data schema:
+    * the read then launches no schema-inference job.
     */
   private def computeFileStats(spark: SparkSession,
                                table: org.apache.hadoop.fs.Path,
                                rels: Seq[String],
                                cols: Seq[String],
-                               bloomCols: Seq[String] = Nil): FileStats = {
+                               bloomCols: Seq[String] = Nil,
+                               schema: Option[StructType] = None): FileStats = {
     if (rels.isEmpty || (cols.isEmpty && bloomCols.isEmpty)) return Map.empty
-    val df = spark.read.parquet(rels.map(rel =>
+    val reader = schema.fold(spark.read)(spark.read.schema(_))
+    val df = reader.parquet(rels.map(rel =>
       new org.apache.hadoop.fs.Path(table, rel).toString): _*)
     val present = cols.filter(df.columns.contains)
     val bPresent = bloomCols.filter(df.columns.contains)
@@ -1842,40 +1906,9 @@ object EventStreams {
       }.mkString(",") + "}"
     }.getOrElse("")
 
-  private def manifestColIds(fs: org.apache.hadoop.fs.FileSystem,
-                             p: org.apache.hadoop.fs.Path): Option[ColIds] = {
-    val in = fs.open(p)
-    val s = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    val start = s.indexOf(""""colIds":{""")
-    if (start < 0) None
-    else {
-      val open = s.indexOf('{', start)
-      var depth = 0; var i = open; var end = -1
-      while (i < s.length && end < 0) {
-        s(i) match {
-          case '{' => depth += 1
-          case '}' => depth -= 1; if (depth == 0) end = i
-          case _ =>
-        }
-        i += 1
-      }
-      val body = s.substring(open, if (end < 0) s.length else end + 1)
-      val entry = """"(\d+)":\[((?:\[[^\]]*\],?)*)\]""".r
-      val pair = """\["([^"]*)",(-?\d+)\]""".r
-      val m = entry.findAllMatchIn(body).map { e =>
-        e.group(1).toInt -> pair.findAllMatchIn(e.group(2))
-          .map(p => (p.group(1), p.group(2).toLong)).toSeq
-      }.toMap
-      if (m.isEmpty) None else Some(m)
-    }
-  }
-
   /** The latest manifest's column-id contract, if any. */
-  def tableColIds(spark: SparkSession, tableDir: String): Option[ColIds] = {
-    val table = new org.apache.hadoop.fs.Path(tableDir)
-    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    manifestList(fs, table).lastOption.flatMap(manifestColIds(fs, _))
-  }
+  def tableColIds(spark: SparkSession, tableDir: String): Option[ColIds] =
+    headManifest(spark, tableDir).flatMap(_.colIds)
 
   /** Per-era rename map for one file ordinal: physical name -> current
     * name, only for ids whose name at `ord` differs from the current.
@@ -1955,31 +1988,9 @@ object EventStreams {
   private def statsTzTag(tz: Option[String]): String =
     tz.map(z => s""","statsTz":"$z"""").getOrElse("")
 
-  /** The TIME ZONE the table's zone-map stats render in — recorded by
-    * every stats-bearing commit since r15, because timestamp stats are
-    * `date_format`-rendered WALL CLOCKS: a probe rendered in a
-    * different zone compares offset strings and can prune files that
-    * hold matching rows (silently wrong results). The contract is ONE
-    * zone per table: writers require their session zone to match the
-    * recorded one (a full [[compactUpsertTable]] recomputes every
-    * file's stats and may ADOPT a new zone); readers render timestamp
-    * probes in the RECORDED zone, so reads are exact from any session.
-    * None for pre-r15 manifests (readers fall back to the session
-    * zone — the pre-r15 behavior).
-    */
-  private def manifestStatsTz(fs: org.apache.hadoop.fs.FileSystem,
-                              p: org.apache.hadoop.fs.Path): Option[String] = {
-    val in = fs.open(p)
-    val s = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    """"statsTz":"([^"]+)"""".r.findFirstMatchIn(s).map(_.group(1))
-  }
-
   /** The latest manifest's recorded stats time zone, if any. */
-  def tableStatsTz(spark: SparkSession, tableDir: String): Option[String] = {
-    val table = new org.apache.hadoop.fs.Path(tableDir)
-    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    manifestList(fs, table).lastOption.flatMap(manifestStatsTz(fs, _))
-  }
+  def tableStatsTz(spark: SparkSession, tableDir: String): Option[String] =
+    headManifest(spark, tableDir).flatMap(_.statsTz)
 
   /** The stats time zone an incremental stats-bearing commit writes
     * under: the recorded zone when present (REQUIRING the session to
@@ -1988,11 +1999,11 @@ object EventStreams {
     * this commit records stats at all.
     */
   private def resolveStatsTz(spark: SparkSession,
-                             fs: org.apache.hadoop.fs.FileSystem,
                              table: org.apache.hadoop.fs.Path,
+                             recorded: Option[String],
                              recordsStats: Boolean): Option[String] = {
     val session = spark.sessionState.conf.sessionLocalTimeZone
-    manifestList(fs, table).lastOption.flatMap(manifestStatsTz(fs, _)) match {
+    recorded match {
       case Some(z) =>
         require(z == session,
           s"$table records its zone-map stats in time zone '$z' but this " +
@@ -2025,49 +2036,17 @@ object EventStreams {
       ""","bloomCols":[""" + cs.map(c => "\"" + c + "\"").mkString(",") + "]")
       .getOrElse("")
 
-  private def manifestBloomCols(fs: org.apache.hadoop.fs.FileSystem,
-                                p: org.apache.hadoop.fs.Path): Option[Seq[String]] = {
-    val in = fs.open(p)
-    val s = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    """"bloomCols":\[([^\]]*)\]""".r.findFirstMatchIn(s).map { m =>
-      if (m.group(1).isEmpty) Seq.empty[String]
-      else m.group(1).split(",").map(_.stripPrefix("\"").stripSuffix("\"")).toSeq
-    }
-  }
-
   /** The table's recorded BLOOM contract, if any — the columns whose
     * committed files carry membership sketches for equality-probe
     * pruning ([[readUpsertTableWhere]] with lo == hi). Sticky like
     * `statsCols`: None inherits, Some(cols) sets, Some(Nil) drops.
     */
-  def tableBloomCols(spark: SparkSession, tableDir: String): Option[Seq[String]] = {
-    val table = new org.apache.hadoop.fs.Path(tableDir)
-    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    manifestList(fs, table).lastOption.flatMap(manifestBloomCols(fs, _))
-  }
-
-  /** The manifest's STATS CONTRACT — the columns whose per-file min/max
-    * every commit since the contract was set records. Sticky like the
-    * key contract: merges/deletes/compactions inherit it by default, so
-    * a nightly fold never silently drops the pruning a table opted
-    * into. None for tables that never opted in.
-    */
-  private def manifestStatsCols(fs: org.apache.hadoop.fs.FileSystem,
-                                p: org.apache.hadoop.fs.Path): Option[Seq[String]] = {
-    val in = fs.open(p)
-    val s = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    """"statsCols":\[([^\]]*)\]""".r.findFirstMatchIn(s).map { m =>
-      if (m.group(1).isEmpty) Seq.empty[String]
-      else m.group(1).split(",").map(_.stripPrefix("\"").stripSuffix("\"")).toSeq
-    }.filter(_.nonEmpty)
-  }
+  def tableBloomCols(spark: SparkSession, tableDir: String): Option[Seq[String]] =
+    headManifest(spark, tableDir).flatMap(_.bloomCols)
 
   /** The latest manifest's stats contract, if any. */
-  def tableStatsCols(spark: SparkSession, tableDir: String): Option[Seq[String]] = {
-    val table = new org.apache.hadoop.fs.Path(tableDir)
-    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    manifestList(fs, table).lastOption.flatMap(manifestStatsCols(fs, _))
-  }
+  def tableStatsCols(spark: SparkSession, tableDir: String): Option[Seq[String]] =
+    headManifest(spark, tableDir).flatMap(_.statsCols)
 
   /** Every live file's recorded stats under a manifest: sharded lists
     * read each bucket's shard (the same tiny objects a read already
@@ -2084,19 +2063,14 @@ object EventStreams {
   private def bucketFileStats(fs: org.apache.hadoop.fs.FileSystem,
                               p: org.apache.hadoop.fs.Path,
                               buckets: Option[Set[Int]]): FileStats =
-    readShardPointers(fs, p) match {
+    manifestAt(fs, p).shardPointers match {
       case Some(pointers) =>
         val shardsDir = new org.apache.hadoop.fs.Path(p.getParent, shardsDirName)
         pointers.filter(kv => buckets.forall(_.contains(kv._1)))
-          .values.toSeq.distinct.flatMap { name =>
-            val in = fs.open(new org.apache.hadoop.fs.Path(shardsDir, name))
-            val s = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-            parseStats(s)
-          }.toMap
-      case None =>
-        val in = fs.open(p)
-        val s = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-        parseStats(s)
+          .values.toSeq.distinct.flatMap(name =>
+            parseStats(readText(fs, new org.apache.hadoop.fs.Path(shardsDir, name))))
+          .toMap
+      case None => parseStats(readText(fs, p))
     }
 
   private def statSupported(dt: DataType): Boolean = dt match {
@@ -2131,7 +2105,7 @@ object EventStreams {
     val table = new org.apache.hadoop.fs.Path(tableDir)
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val m = manifestList(fs, table).lastOption.getOrElse(return None)
-    if (manifestReconcile(fs, m).isDefined) return None
+    if (manifestAt(fs, m).reconcile.isDefined) return None
     val files = readManifest(fs, m)._2.values.flatten.toSeq
     if (files.isEmpty) return Some(0L) // committed empty: a real zero
     val stats = manifestFileStats(fs, m)
@@ -2158,7 +2132,7 @@ object EventStreams {
     val table = new org.apache.hadoop.fs.Path(tableDir)
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val m = manifestList(fs, table).lastOption.getOrElse(return None)
-    if (manifestReconcile(fs, m).isDefined) return None
+    if (manifestAt(fs, m).reconcile.isDefined) return None
     val files = readManifest(fs, m)._2.values.flatten.toSeq
     if (files.isEmpty) return None // empty table: no bounds to state
     val stats = manifestFileStats(fs, m)
@@ -2229,7 +2203,7 @@ object EventStreams {
     // the files' membership sketches: one local job computes the two
     // xxhash64 probe positions per bound, typed exactly as the writer
     // hashed the column (hash equality needs value+type equality)
-    val bloomContracted = manifestBloomCols(fs, manifest)
+    val bloomContracted = manifestAt(fs, manifest).bloomCols
       .getOrElse(Seq.empty).toSet
     val bloomProbes: Map[String, (Int, Int)] = {
       val eqBounds = typed.filter { case (c, _, lo, hi) =>
@@ -2268,7 +2242,7 @@ object EventStreams {
         case Some(_) => true // half-written entry: conservative
       })
     }
-    val pruned = manifestReconcile(fs, manifest) match {
+    val pruned = manifestAt(fs, manifest).reconcile match {
       case Some(_) => // bucket granularity (see scaladoc)
         live.filter { case (_, fls) => fls.exists(overlaps) }
       case None =>
@@ -2280,7 +2254,7 @@ object EventStreams {
       // file (inputFiles stays empty — the audit evidence surface);
       // mixed-schema snapshots fall back to the schema-merging reader
       // so the empty frame still carries adopted columns
-      if (manifestMixed(fs, manifest))
+      if (manifestAt(fs, manifest).mixed)
         readUpsertTable(spark, tableDir).limit(0)
       else spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
@@ -2390,17 +2364,17 @@ object EventStreams {
             "(pruned by retention, or never committed); pin snapshots " +
             "an audit must outlive"))
     }
-    require(manifestReconcile(fs, manifest).isEmpty,
+    require(manifestAt(fs, manifest).reconcile.isEmpty,
       s"$tableDir holds unfolded delta commits; file-level pruning could " +
         "resurrect superseded versions — compactUpsertTable first, or " +
         "read through readUpsertTableWhere (bucket-granular)")
-    require(!manifestMixed(fs, manifest),
+    require(!manifestAt(fs, manifest).mixed,
       s"$tableDir is a mixed-schema snapshot; the pruned scan plans one " +
         "fixed data schema — compactUpsertTable re-homogenizes it")
     val rels = readManifest(fs, manifest)._2.values.flatten.toSeq
     val stats = manifestFileStats(fs, manifest)
-    val bloom = manifestBloomCols(fs, manifest).getOrElse(Seq.empty).toSet
-    val tz = manifestStatsTz(fs, manifest)
+    val bloom = manifestAt(fs, manifest).bloomCols.getOrElse(Seq.empty).toSet
+    val tz = manifestAt(fs, manifest).statsTz
     // file statuses from the manifest's recorded byte lengths (every
     // r14+ shard carries them) — ZERO per-file driver RPCs at planning
     // time; files a legacy shard hasn't re-recorded yet fall back to
@@ -2424,7 +2398,7 @@ object EventStreams {
       return Seq((new ZoneMapFileIndex(table, Seq.empty, stats, schema,
         bloom, statsTz = tz), schema, Map.empty))
     }
-    val multi = manifestColIds(fs, manifest)
+    val multi = manifestAt(fs, manifest).colIds
       .getOrElse(Map.empty: ColIds).filter(_._2.size > 1)
     val eras: Seq[(Map[String, String], Seq[String])] =
       if (multi.isEmpty) Seq((Map.empty[String, String], rels))
@@ -2501,16 +2475,16 @@ object EventStreams {
                                 fs: org.apache.hadoop.fs.FileSystem,
                                 manifest: org.apache.hadoop.fs.Path,
                                 live: Map[Int, Seq[String]]): org.apache.spark.sql.DataFrame = {
-    val mixed = manifestMixed(fs, manifest)
+    val mixed = manifestAt(fs, manifest).mixed
     // per-era column-name translation (round 16): THIS manifest's
     // colIds contract — a time-travel read below a rename resolves the
     // pre-rename manifest, whose contract has no second name, so it
     // serves the OLD name untranslated (the rename is invisible to
     // history, by design)
-    val colIds = manifestColIds(fs, manifest)
+    val colIds = manifestAt(fs, manifest).colIds
     def scan(files: Seq[String]) =
       readFilesTranslated(spark, table, colIds, files, mergeSchema = mixed)
-    manifestReconcile(fs, manifest) match {
+    manifestAt(fs, manifest).reconcile match {
       case Some((ks, v)) =>
         val (deltaB, plainB) = live.filter(_._2.nonEmpty)
           .partition(_._2.map(fileOrdinal).distinct.size > 1)
@@ -2532,19 +2506,6 @@ object EventStreams {
     }
   }
 
-  /** Does this manifest mark the table's live set as MIXED-schema —
-    * i.e. some committed file pre-dates a schema widening? Set sticky
-    * by the first widening merge; readers pay the parquet schema-merge
-    * only for flagged snapshots (unflagged tables read one footer, the
-    * common case — the ADVICE-r10 adoption without a per-read tax).
-    */
-  private def manifestMixed(fs: org.apache.hadoop.fs.FileSystem,
-                            p: org.apache.hadoop.fs.Path): Boolean = {
-    val in = fs.open(p)
-    val s = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    s.contains(""""mixed":1""")
-  }
-
   /** Highest committed manifest, if any. */
   private def latestManifest(fs: org.apache.hadoop.fs.FileSystem,
                              table: org.apache.hadoop.fs.Path): Option[(Long, Map[Int, Seq[String]])] =
@@ -2558,6 +2519,14 @@ object EventStreams {
     * partial write. A crash between the shard writes and the list
     * publish leaves orphan shard files that the replay (same batchId ⇒
     * same shard names) overwrites and [[compactManifests]] GCs.
+    *
+    * The shard writes FAN OUT: they are independent objects, so they
+    * run concurrently on the bounded global pool, and the publish joins
+    * every one of them before it stages the list. A failed shard write
+    * (`beforeShardRename` is the injection seam the crash specs use)
+    * fails the publish with an IllegalStateException naming the bucket
+    * and batch, after the other writes have settled and before any list
+    * exists — the list rename is still the single commit point.
     *
     * `touched` bounds the metadata write: buckets outside it REUSE the
     * previous list's shard pointers (their content is unchanged by
@@ -2611,19 +2580,20 @@ object EventStreams {
                               statsTz: Option[String] = None,
                               beforeRename: () => Unit = () => (),
                               colIds: Option[ColIds] = None,
-                              versionedBy: Option[String] = None): Unit = {
+                              versionedBy: Option[String] = None,
+                              beforeShardRename: Int => Unit = _ => ()): Unit = {
     val dir = manifestsDir(table)
     // the version contract is STICKY inside the publish itself: callers
     // that neither adopt nor translate it (folds, deletes, restores)
     // carry the recorded one without naming it — one read, no call-site
     // churn, and a contract can never silently drop off the chain
     val effVersionedBy = versionedBy.orElse(
-      manifestList(fs, table).lastOption.flatMap(manifestVersionedBy(fs, _)))
+      manifestList(fs, table).lastOption.flatMap(manifestAt(fs, _).versionedBy))
     val shardsDir = new org.apache.hadoop.fs.Path(dir, shardsDirName)
     fs.mkdirs(shardsDir)
     val prev: Map[Int, String] = touched match {
       case Some(_) => manifestList(fs, table).lastOption
-        .flatMap(readShardPointers(fs, _)).getOrElse(Map.empty)
+        .flatMap(manifestAt(fs, _).shardPointers).getOrElse(Map.empty)
       case None => Map.empty
     }
     val touchedSet = touched.map(_.toSet).getOrElse(Set.empty)
@@ -2631,61 +2601,77 @@ object EventStreams {
     // rebase can drop some of them (an untouched bucket the interloper
     // emptied), and a dropped self-written shard must be collected
     // post-commit or it lingers as an fsck-red orphan
-    val selfWritten = scala.collection.mutable.Map.empty[Int, String]
-    val pointers = live.toSeq.sortBy(_._1).map { case (b, fls) =>
-      if (touched.isDefined && !touchedSet.contains(b) && prev.contains(b))
-        b -> prev(b)
-      else {
-        val name = f"s$b-$batchId%020d.json"
-        selfWritten(b) = name
-        // a rewritten TOUCHED bucket's shard re-serializes the stats of
-        // any files it CARRIES from the previous shard (a delta append
-        // keeps the bucket's older files live) plus this commit's fresh
-        // ones; untouched buckets reuse pointers, stats and all
-        val carried: FileStats = prev.get(b) match {
-          case Some(prevName) =>
-            val p = new org.apache.hadoop.fs.Path(shardsDir, prevName)
-            if (!fs.exists(p)) Map.empty
-            else {
-              val in = fs.open(p)
-              val s = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-              parseStats(s)
-            }
-          case None => Map.empty
-        }
-        val liveSet = fls.toSet
-        val shardStats = (carried ++ fileStats).filter(kv => liveSet(kv._1))
-        // every file of a rewritten shard records its byte length
-        // ([[statsBytesKey]]): carried entries keep theirs, anything
-        // else (fresh files, pre-__bytes legacy carries) looks it up
-        // ONCE here — O(missing) at commit, zero per-file RPCs at
-        // scan. A failed lookup records nothing rather than failing
-        // the publish: file EXISTENCE is fsck's invariant, not the
-        // publisher's, and the scan falls back per missing entry
-        val withBytes = fls.foldLeft(shardStats) { (m, rel) =>
-          if (m.get(rel).exists(_.contains(statsBytesKey))) m
-          else scala.util.Try(fs.getFileStatus(
-              new org.apache.hadoop.fs.Path(table, rel)).getLen.toString)
-            .toOption match {
-              case Some(len) => m.updated(rel, m.getOrElse(rel, Map.empty) +
-                (statsBytesKey -> ((Some(len), Some(len)))))
-              case None => m
-            }
-        }
-        val body = s"""{"bucket":$b,"files":[""" +
-          fls.sorted.map(f => "\"" + f + "\"").mkString(",") + "]" +
-          statsTag(withBytes) + "}"
-        val tmp = new org.apache.hadoop.fs.Path(shardsDir, s".$name.tmp")
-        val out = fs.create(tmp, true)
-        try out.write(body.getBytes("UTF-8")) finally out.close()
-        val dest = new org.apache.hadoop.fs.Path(shardsDir, name)
-        // a crashed attempt at this batchId can have left the shard
-        // behind; no committed list names it yet, so replacing is safe
-        if (fs.exists(dest)) fs.delete(dest, false)
-        require(fs.rename(tmp, dest), s"manifest shard publish failed for $dest")
-        b -> name
+    val selfWritten: Map[Int, String] = live.keys
+      .filterNot(b => touched.isDefined && !touchedSet.contains(b) && prev.contains(b))
+      .map(b => b -> f"s$b-$batchId%020d.json").toMap
+    def writeShard(b: Int, name: String): Unit = {
+      val fls = live(b)
+      // a rewritten TOUCHED bucket's shard re-serializes the stats of
+      // any files it CARRIES from the previous shard (a delta append
+      // keeps the bucket's older files live) plus this commit's fresh
+      // ones; untouched buckets reuse pointers, stats and all
+      val carried: FileStats = prev.get(b) match {
+        case Some(prevName) =>
+          val p = new org.apache.hadoop.fs.Path(shardsDir, prevName)
+          if (!fs.exists(p)) Map.empty else parseStats(readText(fs, p))
+        case None => Map.empty
       }
+      val liveSet = fls.toSet
+      val shardStats = (carried ++ fileStats).filter(kv => liveSet(kv._1))
+      // every file of a rewritten shard records its byte length
+      // ([[statsBytesKey]]): carried entries keep theirs, fresh files
+      // arrive with theirs in `fileStats` (the merge takes them from its
+      // own listing), and anything else (pre-__bytes legacy carries,
+      // callers that pass none) looks it up ONCE here — O(missing) at
+      // commit, zero per-file RPCs at scan. A failed lookup records
+      // nothing rather than failing the publish: file EXISTENCE is
+      // fsck's invariant, not the publisher's, and the scan falls back
+      // per missing entry
+      val withBytes = fls.foldLeft(shardStats) { (m, rel) =>
+        if (m.get(rel).exists(_.contains(statsBytesKey))) m
+        else scala.util.Try(fs.getFileStatus(
+            new org.apache.hadoop.fs.Path(table, rel)).getLen.toString)
+          .toOption match {
+            case Some(len) => m.updated(rel, m.getOrElse(rel, Map.empty) +
+              (statsBytesKey -> ((Some(len), Some(len)))))
+            case None => m
+          }
+      }
+      val body = s"""{"bucket":$b,"files":[""" +
+        fls.sorted.map(f => "\"" + f + "\"").mkString(",") + "]" +
+        statsTag(withBytes) + "}"
+      val tmp = new org.apache.hadoop.fs.Path(shardsDir, s".$name.tmp")
+      val out = fs.create(tmp, true)
+      try out.write(body.getBytes("UTF-8")) finally out.close()
+      beforeShardRename(b)
+      val dest = new org.apache.hadoop.fs.Path(shardsDir, name)
+      // a crashed attempt at this batchId can have left the shard
+      // behind; no committed list names it yet, so replacing is safe
+      if (fs.exists(dest)) fs.delete(dest, false)
+      require(fs.rename(tmp, dest), s"manifest shard publish failed for $dest")
     }
+    // SHARD FAN-OUT: the rewritten shards are independent small objects,
+    // written concurrently on the bounded global pool. EVERY write is
+    // joined before anything else happens, and any failure is rethrown
+    // named, before the list file below is even staged — so the list
+    // rename stays the single commit point, and a failed publish leaves
+    // at most same-named shards the replay overwrites
+    val shardWrites = selfWritten.toSeq.sortBy(_._1).map { case (b, name) =>
+      b -> scala.concurrent.Future(writeShard(b, name))(
+        scala.concurrent.ExecutionContext.global)
+    }
+    val shardFailures = shardWrites.flatMap { case (b, f) =>
+      scala.util.Try(scala.concurrent.Await.result(f,
+        scala.concurrent.duration.Duration(10, "min"))).failed.toOption.map(b -> _)
+    }
+    shardFailures.headOption.foreach { case (b, e) =>
+      throw new IllegalStateException(
+        s"manifest shard write failed for bucket $b of batch $batchId on " +
+          s"$table (${shardFailures.size} of ${shardWrites.size} shard " +
+          "writes failed); no manifest list was published, readers keep " +
+          s"the previous snapshot — replay batch $batchId", e)
+    }
+    val pointers = live.keys.toSeq.sorted.map(b => b -> selfWritten.getOrElse(b, prev(b)))
     val kindTag = kind.map(k => s""","kind":"$k"""").getOrElse("")
     fs.mkdirs(dir)
     // COMMIT LOOP with OPTIMISTIC REBASE (round 15): the lost-update
@@ -2723,7 +2709,7 @@ object EventStreams {
       // provably disjoint-bucket commit we can rebase onto
       val moved = baseNow.flatMap { b =>
         val head = manifestList(fs, table).lastOption
-        if (head.map(manifestBatchId(fs, _)) != b) Some((b, head)) else None
+        if (head.map(manifestAt(fs, _).batchId) != b) Some((b, head)) else None
       }
       moved match {
         case None =>
@@ -2759,7 +2745,7 @@ object EventStreams {
                 // re-check under the token: a winner may have committed
                 // between our head read and our token acquisition
                 val headNow = manifestList(fs, table).lastOption
-                  .map(manifestBatchId(fs, _))
+                  .map(manifestAt(fs, _).batchId)
                 if (baseNow.contains(headNow)) true
                 else {
                   releaseCommitToken(fs, table, parent, batchId)
@@ -2807,7 +2793,7 @@ object EventStreams {
           attempts += 1
           def conflict(why: String): Nothing = throw new IllegalStateException(
             s"lost-update guard: $table advanced from base " +
-              s"${b.getOrElse("<empty>")} to ${headOpt.map(manifestBatchId(fs, _))
+              s"${b.getOrElse("<empty>")} to ${headOpt.map(manifestAt(fs, _).batchId)
                 .getOrElse("<empty>")} while batch $batchId was being " +
               s"computed, and the commit cannot rebase ($why). " +
               "Re-drive this batch: its replay will recompute on the new " +
@@ -2816,7 +2802,7 @@ object EventStreams {
             "the rebase can catch up after 8 attempts")
           val head = headOpt.getOrElse(conflict(
             "the manifest chain vanished mid-publish"))
-          val headId = manifestBatchId(fs, head)
+          val headId = manifestAt(fs, head).batchId
           if (touched.isEmpty) conflict(
             "this is a full-rewrite commit (fold/restore/compaction) — " +
               "it rewrites every bucket and conflicts with any concurrent " +
@@ -2832,10 +2818,10 @@ object EventStreams {
             .getOrElse(conflict(
               s"the base snapshot $baseId is no longer in the manifest " +
                 "chain (pruned by a concurrent compaction)"))
-          val basePtrs = readShardPointers(fs, baseManifest).getOrElse(
+          val basePtrs = manifestAt(fs, baseManifest).shardPointers.getOrElse(
             conflict("the base manifest is legacy-inline (no shard " +
               "pointers to diff)"))
-          val headPtrs = readShardPointers(fs, head).getOrElse(
+          val headPtrs = manifestAt(fs, head).shardPointers.getOrElse(
             conflict("the head manifest is legacy-inline (no shard " +
               "pointers to diff)"))
           val othersTouched = (basePtrs.keySet ++ headPtrs.keySet)
@@ -2845,21 +2831,21 @@ object EventStreams {
             s"the concurrent commit touched bucket(s) ${overlap.toSeq.sorted
               .mkString(",")} this batch also touches — overlapping " +
               "writes cannot both hold")
-          if (readNBuckets(fs, head) != nBuckets) conflict(
+          if (manifestAt(fs, head).nBuckets != nBuckets) conflict(
             "the concurrent commit re-bucketed the table")
-          if (manifestReconcile(fs, head) != reconcile) conflict(
+          if (manifestAt(fs, head).reconcile != reconcile) conflict(
             "the concurrent commit changed the reconcile spec")
-          if (manifestKeyedBy(fs, head) != keyedBy) conflict(
+          if (manifestAt(fs, head).keyedBy != keyedBy) conflict(
             "the concurrent commit changed the key contract")
-          if (manifestVersionedBy(fs, head) != effVersionedBy) conflict(
+          if (manifestAt(fs, head).versionedBy != effVersionedBy) conflict(
             "the concurrent commit changed the version contract")
-          if (manifestStatsCols(fs, head) != statsCols) conflict(
+          if (manifestAt(fs, head).statsCols != statsCols) conflict(
             "the concurrent commit changed the stats contract")
-          if (manifestBloomCols(fs, head) != bloomCols) conflict(
+          if (manifestAt(fs, head).bloomCols != bloomCols) conflict(
             "the concurrent commit changed the bloom contract")
-          if (manifestStatsTz(fs, head) != statsTz) conflict(
+          if (manifestAt(fs, head).statsTz != statsTz) conflict(
             "the concurrent commit changed the stats time zone")
-          if (manifestColIds(fs, head) != colIds) conflict(
+          if (manifestAt(fs, head).colIds != colIds) conflict(
             "the concurrent commit changed the column-id contract " +
               "(a rename raced this write)")
           // REBASE: untouched buckets become EXACTLY the head's view —
@@ -2872,7 +2858,7 @@ object EventStreams {
           // the true parent; mixed is sticky across both.
           pointersNow = headPtrs.filter(kv => !touchedSet(kv._1)) ++
             pointersNow.filter(kv => touchedSet(kv._1))
-          mixedNow = mixedNow || manifestMixed(fs, head)
+          mixedNow = mixedNow || manifestAt(fs, head).mixed
           baseNow = Some(Some(headId))
       }
     }
@@ -2915,11 +2901,7 @@ object EventStreams {
       true
     } catch {
       case _: java.io.IOException =>
-        val holder =
-          try {
-            val in = fs.open(token)
-            try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
-          } catch { case _: Exception => "" }
+        val holder = try readText(fs, token).trim catch { case _: Exception => "" }
         if (holder == batchId.toString) true // our crashed attempt: adopt
         else {
           val holderCommitted = holder.toLongOption.exists(id =>
@@ -2940,11 +2922,8 @@ object EventStreams {
             val trash = new org.apache.hadoop.fs.Path(token.getParent,
               s".collect-${token.getName}-$batchId")
             if (fs.rename(token, trash)) {
-              val moved = try {
-                val in = fs.open(trash)
-                try new String(in.readAllBytes(), "UTF-8").trim
-                finally in.close()
-              } catch { case _: Exception => holder }
+              val moved = try readText(fs, trash).trim
+                catch { case _: Exception => holder }
               if (moved == holder) fs.delete(trash, false) // collected
               else if (!fs.rename(trash, token)) fs.delete(trash, false)
             }
@@ -2970,10 +2949,7 @@ object EventStreams {
                                  parent: Option[Long],
                                  batchId: Long): Unit = {
     val token = commitTokenPath(table, parent)
-    val holder = try {
-      val in = fs.open(token)
-      try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
-    } catch { case _: Exception => return }
+    val holder = try readText(fs, token).trim catch { case _: Exception => return }
     if (holder == batchId.toString) fs.delete(token, false)
     ()
   }
@@ -3042,17 +3018,17 @@ object EventStreams {
     require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
     val table = new Path(tableDir)
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = latestManifest(fs, table).getOrElse(
+    val head = manifestList(fs, table).lastOption.map(manifestAt(fs, _)).getOrElse(
       throw new IllegalArgumentException(
         s"$tableDir has no committed manifest; run one mergeBatchIntoTable " +
           "(which migrates legacy layouts) before compacting"))
-    if (committed._1 >= batchId) { // replayed batch
+    if (head.batchId >= batchId) { // replayed batch
       sweepUnreferenced(fs, table, retainedFiles(fs, table, retain))
       return
     }
-    val live = committed._2
+    val live = head.live
     if (live.valuesIterator.forall(_.isEmpty)) return // empty table
-    val mixed = manifestList(fs, table).lastOption.exists(manifestMixed(fs, _))
+    val mixed = head.mixed
     // leaf-file reads carry no partition column: the bucket is
     // recomputed from the keys (deterministic, the merge convention).
     // Delta history folds here — this is THE delta fold: the rewrite
@@ -3061,12 +3037,10 @@ object EventStreams {
     // the fold MATERIALIZES renames: old-era files read translated and
     // rewrite under current names; the published contract truncates to
     // single-name histories (everything physical is current again)
-    val prevColIds = manifestList(fs, table).lastOption
-      .flatMap(manifestColIds(fs, _))
+    val prevColIds = head.colIds
     val raw = readFilesTranslated(spark, table, prevColIds,
       live.values.flatten.toSeq, mergeSchema = mixed)
-    val current = manifestList(fs, table).lastOption
-      .flatMap(manifestReconcile(fs, _))
+    val current = head.reconcile
       .map { case (ks, v) => reconcileRows(raw, ks, v) }.getOrElse(raw)
       .withColumn(upsertBucketCol, pmod(hash(keyCols.map(col): _*), lit(nBuckets)))
     val genName = s"gen_$batchId"
@@ -3097,12 +3071,8 @@ object EventStreams {
         if (fls.isEmpty) None else Some(b -> fls)
       }
     }.toMap
-    val effStatsCols = statsCols.getOrElse(
-      manifestList(fs, table).lastOption
-        .flatMap(manifestStatsCols(fs, _)).getOrElse(Seq.empty))
-    val effBloomCols = bloomCols.getOrElse(
-      manifestList(fs, table).lastOption
-        .flatMap(manifestBloomCols(fs, _)).getOrElse(Seq.empty))
+    val effStatsCols = statsCols.getOrElse(head.statsCols.getOrElse(Seq.empty))
+    val effBloomCols = bloomCols.getOrElse(head.bloomCols.getOrElse(Seq.empty))
     val freshStats: FileStats =
       if (effStatsCols.isEmpty && effBloomCols.isEmpty) Map.empty
       else computeFileStats(spark, table,
@@ -3117,7 +3087,7 @@ object EventStreams {
       keyedBy = Some(keyCols), fileStats = freshStats,
       statsCols = if (effStatsCols.nonEmpty) Some(effStatsCols) else None,
       bloomCols = if (effBloomCols.nonEmpty) Some(effBloomCols) else None,
-      base = Some(Some(committed._1)), kind = Some("fold"),
+      base = Some(Some(head.batchId)), kind = Some("fold"),
       statsTz = if (effStatsCols.nonEmpty || effBloomCols.nonEmpty)
         Some(spark.sessionState.conf.sessionLocalTimeZone) else None,
       // histories truncate to the current name at ordinal 0: every
@@ -3175,7 +3145,7 @@ object EventStreams {
       s"$tableDir already has a column '$newName' — renames never merge " +
         "columns")
     // the contract: adopt lazily (ids in schema order) on first rename
-    val base0: ColIds = manifestColIds(fs, manifest).getOrElse(
+    val base0: ColIds = manifestAt(fs, manifest).colIds.getOrElse(
       schema.fieldNames.zipWithIndex
         .map { case (n, i) => i -> Seq((n, 0L)) }.toMap)
     val id = base0.collectFirst {
@@ -3198,18 +3168,18 @@ object EventStreams {
     val hist = base0.getOrElse(id, Seq((oldName, 0L)))
     val colIds = base0.updated(id, hist :+ ((newName, batchId)))
     def ren(s: String) = if (s == oldName) newName else s
-    publishManifest(fs, table, batchId, readNBuckets(fs, manifest),
-      committed._2, manifestMixed(fs, manifest),
+    publishManifest(fs, table, batchId, manifestAt(fs, manifest).nBuckets,
+      committed._2, manifestAt(fs, manifest).mixed,
       touched = Some(Nil), // METADATA ONLY: every pointer reused
-      reconcile = manifestReconcile(fs, manifest)
+      reconcile = manifestAt(fs, manifest).reconcile
         .map { case (ks, v) => (ks.map(ren), ren(v)) },
-      keyedBy = manifestKeyedBy(fs, manifest).map(_.map(ren)),
-      statsCols = manifestStatsCols(fs, manifest).map(_.map(ren)),
-      bloomCols = manifestBloomCols(fs, manifest).map(_.map(ren)),
+      keyedBy = manifestAt(fs, manifest).keyedBy.map(_.map(ren)),
+      statsCols = manifestAt(fs, manifest).statsCols.map(_.map(ren)),
+      bloomCols = manifestAt(fs, manifest).bloomCols.map(_.map(ren)),
       base = Some(Some(committed._1)), kind = Some("rename"),
-      statsTz = manifestStatsTz(fs, manifest),
+      statsTz = manifestAt(fs, manifest).statsTz,
       colIds = Some(colIds),
-      versionedBy = manifestVersionedBy(fs, manifest).map(ren))
+      versionedBy = manifestAt(fs, manifest).versionedBy.map(ren))
   }
 
   /** METADATA-ONLY COLUMN DROP — [[renameColumn]]'s sibling: the
@@ -3238,20 +3208,20 @@ object EventStreams {
     require(schema.fieldNames.contains(name),
       s"$tableDir has no column '$name' " +
         s"(columns: ${schema.fieldNames.mkString(",")})")
-    val keyed = manifestKeyedBy(fs, manifest)
+    val keyed = manifestAt(fs, manifest).keyedBy
     require(!keyed.exists(_.contains(name)),
       s"'$name' is part of $tableDir's key contract — dropping a key " +
         "column would orphan the table's addressing; re-key via a full " +
         "rewrite instead")
-    require(!manifestReconcile(fs, manifest).exists { case (ks, v) =>
+    require(!manifestAt(fs, manifest).reconcile.exists { case (ks, v) =>
       ks.contains(name) || v == name },
       s"'$name' carries $tableDir's delta reconcile semantics (key or " +
         "version); fold the deltas first")
-    require(!manifestVersionedBy(fs, manifest).contains(name),
+    require(!manifestAt(fs, manifest).versionedBy.contains(name),
       s"'$name' is $tableDir's recorded version contract — dropping it " +
         "would orphan same-key upsert arbitration; re-version via a " +
         "full rewrite instead")
-    val base0: ColIds = manifestColIds(fs, manifest).getOrElse(
+    val base0: ColIds = manifestAt(fs, manifest).colIds.getOrElse(
       schema.fieldNames.zipWithIndex
         .map { case (n, i) => i -> Seq((n, 0L)) }.toMap)
     val id = base0.collectFirst {
@@ -3267,17 +3237,17 @@ object EventStreams {
     }
     val hist = base0.getOrElse(id, Seq((name, 0L)))
     val colIds = base0.updated(id, hist :+ (("", batchId)))
-    publishManifest(fs, table, batchId, readNBuckets(fs, manifest),
-      committed._2, manifestMixed(fs, manifest),
+    publishManifest(fs, table, batchId, manifestAt(fs, manifest).nBuckets,
+      committed._2, manifestAt(fs, manifest).mixed,
       touched = Some(Nil), // METADATA ONLY
-      reconcile = manifestReconcile(fs, manifest),
+      reconcile = manifestAt(fs, manifest).reconcile,
       keyedBy = keyed,
-      statsCols = manifestStatsCols(fs, manifest)
+      statsCols = manifestAt(fs, manifest).statsCols
         .map(_.filterNot(_ == name)).filter(_.nonEmpty),
-      bloomCols = manifestBloomCols(fs, manifest)
+      bloomCols = manifestAt(fs, manifest).bloomCols
         .map(_.filterNot(_ == name)).filter(_.nonEmpty),
       base = Some(Some(committed._1)), kind = Some("rename"),
-      statsTz = manifestStatsTz(fs, manifest),
+      statsTz = manifestAt(fs, manifest).statsTz,
       colIds = Some(colIds))
   }
 
@@ -3316,7 +3286,7 @@ object EventStreams {
     val manifest = manifestList(fs, table).lastOption.getOrElse(
       throw new IllegalArgumentException(
         s"$tableDir has no committed manifest; nothing to measure"))
-    val recorded = manifestStatsCols(fs, manifest).getOrElse(Seq.empty)
+    val recorded = manifestAt(fs, manifest).statsCols.getOrElse(Seq.empty)
     require(cols.forall(recorded.contains),
       s"$tableDir records stats on (${recorded.mkString(",")}); the drift " +
         s"monitor needs every named column (${cols.mkString(",")}) covered " +
@@ -3382,25 +3352,23 @@ object EventStreams {
       "pass sortBy (lexicographic) OR zOrderBy (multi-dimension), not both")
     val table = new Path(tableDir)
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = latestManifest(fs, table).getOrElse(
+    val head = manifestList(fs, table).lastOption.map(manifestAt(fs, _)).getOrElse(
       throw new IllegalArgumentException(
         s"$tableDir has no committed manifest; run one mergeBatchIntoTable " +
           "before re-clustering"))
-    if (committed._1 >= batchId) { // replayed batch
+    if (head.batchId >= batchId) { // replayed batch
       sweepUnreferenced(fs, table, retainedFiles(fs, table, retain))
       return
     }
-    val live = committed._2
+    val live = head.live
     val touched = buckets.toSeq.sorted.filter(b => live.get(b).exists(_.nonEmpty))
     if (touched.isEmpty) return // nothing to rewrite: no commit needed
-    val mixed = manifestList(fs, table).lastOption.exists(manifestMixed(fs, _))
-    val prevReconcile = manifestList(fs, table).lastOption
-      .flatMap(manifestReconcile(fs, _))
+    val mixed = head.mixed
+    val prevReconcile = head.reconcile
     // colIds carried VERBATIM (untouched buckets may still hold
     // old-era files); the rewritten buckets' fresh files carry this
     // commit's ordinal, which resolves to current names
-    val bColIds = manifestList(fs, table).lastOption
-      .flatMap(manifestColIds(fs, _))
+    val bColIds = head.colIds
     val raw = readFilesTranslated(spark, table, bColIds,
       touched.flatMap(live.get).flatten, mergeSchema = mixed)
     val current = prevReconcile
@@ -3437,10 +3405,8 @@ object EventStreams {
       }
     }.toMap
     val newLive = (live -- touched) ++ rewritten
-    val effStatsCols = manifestList(fs, table).lastOption
-      .flatMap(manifestStatsCols(fs, _)).getOrElse(Seq.empty)
-    val effBloomCols = manifestList(fs, table).lastOption
-      .flatMap(manifestBloomCols(fs, _)).getOrElse(Seq.empty)
+    val effStatsCols = head.statsCols.getOrElse(Seq.empty)
+    val effBloomCols = head.bloomCols.getOrElse(Seq.empty)
     val freshStats: FileStats =
       if (effStatsCols.isEmpty && effBloomCols.isEmpty) Map.empty
       else computeFileStats(spark, table,
@@ -3458,8 +3424,8 @@ object EventStreams {
       keyedBy = Some(keyCols), fileStats = freshStats,
       statsCols = if (effStatsCols.nonEmpty) Some(effStatsCols) else None,
       bloomCols = if (effBloomCols.nonEmpty) Some(effBloomCols) else None,
-      base = Some(Some(committed._1)), kind = Some("fold"),
-      statsTz = resolveStatsTz(spark, fs, table,
+      base = Some(Some(head.batchId)), kind = Some("fold"),
+      statsTz = resolveStatsTz(spark, table, head.statsTz,
         effStatsCols.nonEmpty || effBloomCols.nonEmpty),
       colIds = bColIds)
     sweepUnreferenced(fs, table, retainedFiles(fs, table, retain))
@@ -3545,7 +3511,7 @@ object EventStreams {
     val shardsDir = new org.apache.hadoop.fs.Path(manifestsDir(table), shardsDirName)
     if (fs.exists(shardsDir)) {
       val referenced = manifestList(fs, table)
-        .flatMap(p => readShardPointers(fs, p).map(_.values.toSeq).getOrElse(Seq.empty))
+        .flatMap(p => manifestAt(fs, p).shardPointers.map(_.values.toSeq).getOrElse(Seq.empty))
         .toSet
       fs.listStatus(shardsDir).foreach { s =>
         if (s.isFile && s.getPath.getName.endsWith(".json") &&
@@ -3585,7 +3551,7 @@ object EventStreams {
   private def pointerDiff(fs: org.apache.hadoop.fs.FileSystem,
                           a: org.apache.hadoop.fs.Path,
                           b: org.apache.hadoop.fs.Path): Set[Int] =
-    (readShardPointers(fs, a), readShardPointers(fs, b)) match {
+    (manifestAt(fs, a).shardPointers, manifestAt(fs, b).shardPointers) match {
       case (Some(pa), Some(pb)) =>
         (pa.keySet ++ pb.keySet).filter(k => pa.get(k) != pb.get(k))
       case _ =>
@@ -3664,8 +3630,8 @@ object EventStreams {
         touched ++= pointerDiff(fs, pL, pR)
       i += 1
     }
-    val nbFrom = readNBuckets(fs, mFrom)
-    val nbTo = readNBuckets(fs, mTo)
+    val nbFrom = manifestAt(fs, mFrom).nBuckets
+    val nbTo = manifestAt(fs, mTo).nBuckets
     require(nbFrom == nbTo,
       s"$tableDir was re-bucketed mid-window ($nbFrom -> $nbTo); bucket " +
         "ids are not comparable across the change — resync the consumer")
@@ -3688,7 +3654,7 @@ object EventStreams {
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           schema.add(changeTypeCol, org.apache.spark.sql.types.StringType))
       case (prevOpt, curOpt) =>
-        val keyCols = manifestKeyedBy(fs, mTo).getOrElse(
+        val keyCols = manifestAt(fs, mTo).keyedBy.getOrElse(
           throw new IllegalStateException(
             s"$tableDir's manifest records no key contract (pre-r14 " +
               "writer); the feed needs it to classify deletes — run one " +
@@ -4333,7 +4299,7 @@ object EventStreams {
       if (!fs.exists(shardsDir)) Seq.empty[String]
       else {
         val referenced = manifestPaths.flatMap { p =>
-          try readShardPointers(fs, p).map(_.values.toSeq).getOrElse(Seq.empty)
+          try manifestAt(fs, p).shardPointers.map(_.values.toSeq).getOrElse(Seq.empty)
           catch { case _: Exception => Seq.empty }
         }.toSet
         // a shard named by a LIVE in-flight batchId is a concurrent
@@ -4368,7 +4334,7 @@ object EventStreams {
       .getOrElse(Set.empty[Int])
     val multiGen = multiBuckets.size
     val latestHasSpec = manifestPaths.lastOption.exists(p =>
-      try manifestReconcile(fs, p).isDefined
+      try manifestAt(fs, p).reconcile.isDefined
       catch { case _: Exception => false })
     val specOk = multiGen == 0 || latestHasSpec || {
       // the commit that CREATED a bucket's newest layer is named by
@@ -4385,7 +4351,7 @@ object EventStreams {
         catch { case _: Exception => None }
       }.toMap
       val everSpec = parsed.nonEmpty && manifestPaths.exists(p =>
-        try manifestReconcile(fs, p).isDefined
+        try manifestAt(fs, p).reconcile.isDefined
         catch { case _: Exception => false })
       val latestLive = parsed.last._3
       multiBuckets.forall { b =>
@@ -4478,37 +4444,26 @@ object EventStreams {
       (new Path(table, rel).toString, new Path(dest, rel).toString)))
     // manifest LAST (the commit): a crash above leaves no manifest and
     // the backup reads as nothing / restore refuses
-    val mixed = manifestMixed(fs, src._1)
-    val nBuckets = readNBuckets(fs, src._1)
+    val mixed = manifestAt(fs, src._1).mixed
+    val nBuckets = manifestAt(fs, src._1).nBuckets
     val mDest = new Path(manifestsDir(dest), src._1.getName)
     fs.mkdirs(mDest.getParent)
     val tmp = new Path(mDest.getParent, s".${src._1.getName}.tmp")
     val out = fs.create(tmp, true)
     try out.write(inlineManifestBody(src._2._1, nBuckets, src._2._2, mixed,
-      manifestReconcile(fs, src._1), manifestKeyedBy(fs, src._1),
+      manifestAt(fs, src._1).reconcile, manifestAt(fs, src._1).keyedBy,
       // zone maps travel with the snapshot: a restored table prunes
       // exactly like the original did
       fileStats = manifestFileStats(fs, src._1),
-      statsCols = manifestStatsCols(fs, src._1),
-      bloomCols = manifestBloomCols(fs, src._1),
-      statsTz = manifestStatsTz(fs, src._1),
-      colIds = manifestColIds(fs, src._1))
+      statsCols = manifestAt(fs, src._1).statsCols,
+      bloomCols = manifestAt(fs, src._1).bloomCols,
+      statsTz = manifestAt(fs, src._1).statsTz,
+      colIds = manifestAt(fs, src._1).colIds)
       .getBytes("UTF-8"))
     finally out.close()
     if (!fs.rename(tmp, mDest))
       throw new IllegalStateException(s"backup manifest commit failed at $mDest")
     src._2._1
-  }
-
-  /** The `nBuckets` a manifest was committed with (both shapes carry it
-    * in the list body).
-    */
-  private def readNBuckets(fs: org.apache.hadoop.fs.FileSystem,
-                           p: org.apache.hadoop.fs.Path): Int = {
-    val in = fs.open(p)
-    val s = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    """"nBuckets":(\d+)""".r.findFirstMatchIn(s).map(_.group(1).toInt)
-      .getOrElse(throw new IllegalStateException(s"manifest $p lacks nBuckets"))
   }
 
   /** DISTRIBUTED bulk byte-copy — the file movement of
@@ -4622,8 +4577,8 @@ object EventStreams {
       s"restoring a snapshot committed at batch $srcBatch under the " +
         s"EARLIER id $batchId would run the watermark backwards; restore " +
         "under an id at or above the backup's")
-    val mixed = manifestList(fs, backup).lastOption.exists(manifestMixed(fs, _))
-    val nBuckets = readNBuckets(fs, manifestList(fs, backup).last)
+    val mixed = manifestList(fs, backup).lastOption.exists(manifestAt(fs, _).mixed)
+    val nBuckets = manifestAt(fs, manifestList(fs, backup).last).nBuckets
     // distributed byte movement (the backup path's bulkCopy); the
     // manifest publish below is the commit, so a partial copy is
     // invisible and the replay overwrites it
@@ -4633,23 +4588,23 @@ object EventStreams {
     val backupManifest = manifestList(fs, backup).last
     publishManifest(fs, table, batchId, nBuckets, restored, mixed,
       base = Some(manifestList(fs, table).lastOption
-        .map(manifestBatchId(fs, _))),
-      reconcile = manifestReconcile(fs, backupManifest),
-      keyedBy = manifestKeyedBy(fs, backupManifest),
+        .map(manifestAt(fs, _).batchId)),
+      reconcile = manifestAt(fs, backupManifest).reconcile,
+      keyedBy = manifestAt(fs, backupManifest).keyedBy,
       // stats re-key to the re-homed paths; the values are the files'
       // own (bytes are copied, ranges unchanged)
       fileStats = manifestFileStats(fs, backupManifest)
         .map { case (rel, cs) => destRel(rel) -> cs },
-      statsCols = manifestStatsCols(fs, backupManifest),
-      bloomCols = manifestBloomCols(fs, backupManifest),
+      statsCols = manifestAt(fs, backupManifest).statsCols,
+      bloomCols = manifestAt(fs, backupManifest).bloomCols,
       // the restored stats are the backup's rendered strings: the
       // recorded zone travels with them
-      statsTz = manifestStatsTz(fs, backupManifest),
+      statsTz = manifestAt(fs, backupManifest).statsTz,
       // the column-id contract travels too: restored files keep their
       // ORIGINAL ordinals (the g<orig>- filename marker, which
       // fileOrdinal reads first), so era translation resolves exactly
       // as it did on the source
-      colIds = manifestColIds(fs, backupManifest))
+      colIds = manifestAt(fs, backupManifest).colIds)
     sweepUnreferenced(fs, table, retainedFiles(fs, table, retain))
     true
   }
@@ -4674,7 +4629,7 @@ object EventStreams {
     val out = Set.newBuilder[String]
     val shardNames = Set.newBuilder[String]
     lists.foreach { p =>
-      readShardPointers(fs, p) match {
+      manifestAt(fs, p).shardPointers match {
         case Some(ptrs) => shardNames ++= ptrs.values
         case None => out ++= readManifest(fs, p)._2.values.flatten // legacy inline
       }
@@ -4801,9 +4756,7 @@ object EventStreams {
     if (committed.isEmpty) {
       val meta = new Path(legacyCurrent, "_meta/max_batch")
       if (fs.exists(meta)) {
-        val in = fs.open(meta)
-        val applied = try new String(in.readAllBytes(), "UTF-8").trim.toLong finally in.close()
-        if (batchId <= applied) return
+        if (batchId <= readText(fs, meta).trim.toLong) return
       }
     }
     val liveFiles: Seq[String] = committed.map(_._2.values.flatten.toSeq).getOrElse {

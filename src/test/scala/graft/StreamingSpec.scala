@@ -3574,4 +3574,201 @@ class StreamingSpec extends SparkSpec {
       nBuckets = 2, batchId = 2L)
     assert(EventStreams.readUpsertTable(spark, t).count() === 1L)
   }
+
+  /** Rows of a frame as a sorted multiset of their string renderings,
+    * columns taken in `cols` order.
+    */
+  private def multiset(df: org.apache.spark.sql.DataFrame, cols: Seq[String]): Seq[String] =
+    df.select(cols.map(col): _*).collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  /** Jobs, and the executed plans of parquet writes, that `f` launches
+    * under its own job group. Listener events arrive asynchronously, so
+    * a marker job under a second group is run last: both listeners sit
+    * on the bus's shared queue, which delivers in order, so once the
+    * marker's start is seen every earlier event is in.
+    */
+  private def traced(group: String)(f: => Unit)
+      : (Seq[Int], Seq[org.apache.spark.sql.execution.SparkPlan]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.execution.SparkPlan]()
+    @volatile var markerSeen = false
+    val marker = s"$group-marker"
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.add(e.jobId)
+          case Some(`marker`) => markerSeen = true
+          case _ =>
+        }
+    }
+    val qeListener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(fn: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             ns: Long): Unit = qe.analyzed match {
+        case _: org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand =>
+          writes.add(qe.executedPlan)
+        case _ =>
+      }
+      override def onFailure(fn: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(qeListener)
+    try {
+      sc.setJobGroup(group, group)
+      try f finally sc.clearJobGroup()
+      sc.setJobGroup(marker, marker)
+      try spark.range(1).rdd.count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(markerSeen, "listener bus did not deliver the marker job")
+    } finally {
+      sc.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(qeListener)
+    }
+    (jobs.toArray.map(_.asInstanceOf[Int]).toSeq, writes.toArray.toSeq
+      .map(_.asInstanceOf[org.apache.spark.sql.execution.SparkPlan]))
+  }
+
+  test("eager merge shape: one exchange on the bucket, one file per bucket, exact zone maps, pinned job count") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val t = Files.createTempDirectory("graft-shape").toString + "/t"
+    def rows(ks: Range, v: Long) = ks.map(k =>
+      (k.toLong, if (k % 7 == 0) null else s"p$k-$v", v)).toDF("k", "payload", "version")
+    EventStreams.mergeBatchIntoTable(rows(0 until 400, 0L), t, Seq("k"), "version",
+      nBuckets = 8, batchId = 1L, statsCols = Some(Seq("k", "payload")))
+    // corrections of existing keys plus new keys, every bucket touched
+    val (jobs, writePlans) = traced("graft-merge-shape") {
+      EventStreams.mergeBatchIntoTable(rows(300 until 500, 1L), t, Seq("k"), "version",
+        nBuckets = 8, batchId = 2L)
+    }
+    // the Spark-job count of an eager merge into a stats-contracted
+    // table: touched-bucket probe (map + result), current-file schema
+    // inference, the single exchange's map stage, the write, and the
+    // zone-map aggregate (map + result) — no merge-aggregate stage of
+    // its own, no re-shuffle, no inference job on the read-back
+    assert(jobs.size === 7, s"eager merge launched jobs ${jobs.mkString(",")}")
+    assert(writePlans.size === 1, "exactly one data write per merge")
+    val helper = new AdaptiveSparkPlanHelper {}
+    val exchanges = helper.collect(writePlans.head) { case e: ShuffleExchangeExec => e }
+    assert(exchanges.size === 1, s"current ∪ batch must cross ONE exchange: $exchanges")
+    exchanges.head.outputPartitioning match {
+      case HashPartitioning(Seq(a: org.apache.spark.sql.catalyst.expressions.Attribute), n) =>
+        assert(a.name === EventStreams.upsertBucketCol)
+        assert(n === math.min(8, spark.sparkContext.defaultParallelism))
+      case other => fail(s"the exchange must hash on the bucket alone: $other")
+    }
+    val live = EventStreams.tableManifest(spark, t)
+    assert(live.keySet === (0 until 8).toSet)
+    live.foreach { case (b, fls) =>
+      assert(fls.size === 1 && fls.head.startsWith(s"gen_2/${EventStreams.upsertBucketCol}=$b/"),
+        s"bucket $b must hold exactly one fresh file: $fls")
+    }
+    // recorded zone maps == a plain read-back of each fresh file
+    val stats = EventStreams.tableFileStats(spark, t)
+    live.values.flatten.foreach { rel =>
+      val f = new java.io.File(t, rel)
+      val r = spark.read.parquet(f.toString).agg(count(lit(1)).cast("string"),
+        count(when(col("payload").isNull, 1)).cast("string"),
+        count(when(col("k").isNull, 1)).cast("string"),
+        min("k").cast("string"), max("k").cast("string"),
+        min("payload"), max("payload")).head()
+      def s(i: Int) = Option(r.getString(i))
+      val want = Map("__rows" -> (s(0), s(0)), "__nl_payload" -> (s(1), s(1)),
+        "__nl_k" -> (s(2), s(2)), "k" -> (s(3), s(4)), "payload" -> (s(5), s(6)),
+        "__bytes" -> (Some(f.length.toString), Some(f.length.toString)))
+      assert(stats(rel) === want, s"zone maps of $rel")
+    }
+    assert(multiset(EventStreams.readUpsertTable(spark, t), Seq("k", "payload", "version")) ===
+      multiset(rows(0 until 300, 0L).unionByName(rows(300 until 500, 1L)),
+        Seq("k", "payload", "version")))
+  }
+
+  test("eager merge aggregate: same snapshot multiset as the two-level upsertLatest formula") {
+    import graft.operators.Load
+    val base = Files.createTempDirectory("graft-parity").toString
+    val bucket = EventStreams.upsertBucketCol
+    var n = 0
+    // merge `batch` into `t` and check the snapshot against the old
+    // formula over the previous snapshot: compact the batch, align the
+    // current rows to it, keep-latest over the union
+    def checkMerge(t: String, batch: org.apache.spark.sql.DataFrame,
+                   versionCol: String, id: Long): Unit = {
+      val current = EventStreams.readUpsertTable(spark, t)
+      val bucketOf = pmod(hash(col("k")), lit(4))
+      val toMerge = Load.upsertLatest(batch, batch.limit(0), Seq("k"), versionCol)
+        .withColumn(bucket, bucketOf)
+      val want = Load.upsertLatest(
+        EventStreams.alignTo(current.withColumn(bucket, bucketOf), toMerge, versionCol),
+        toMerge, Seq("k"), versionCol)
+      // materialized BEFORE the merge: its sweep retires the files `want` reads
+      val cols = want.columns.filterNot(_ == bucket).toSeq
+      val wantRows = multiset(want, cols)
+      EventStreams.mergeBatchIntoTable(batch, t, Seq("k"), versionCol, nBuckets = 4, batchId = id)
+      val live = EventStreams.tableManifest(spark, t)
+      assert(live.values.flatten.forall(_.startsWith(s"gen_$id/")),
+        "the batch must touch every bucket, so the whole snapshot is the merge's output")
+      val got = EventStreams.readUpsertTable(spark, t)
+      assert(got.columns.toSet === cols.toSet)
+      assert(multiset(got, cols) === wantRows, s"merge $id")
+      n += 1
+    }
+    val t = s"$base/t"
+    EventStreams.mergeBatchIntoTable((0L until 40L).map(k => (k, s"a$k", 1L))
+      .toDF("k", "payload", "version"), t, Seq("k"), "version", nBuckets = 4, batchId = 1L)
+    // duplicate keys within one batch (the latest version must win)
+    // plus corrections of existing keys, one of them stale
+    checkMerge(t, ((0L until 40L).map(k => (k, s"b$k", 2L)) ++
+      Seq((3L, "b3-late", 5L), (3L, "b3-mid", 4L), (50L, "new1", 1L), (50L, "new2", 2L),
+        (7L, "stale", 0L))).toDF("k", "payload", "version"), "version", 2L)
+    // a widening column: current rows default it to NULL
+    checkMerge(t, (0L until 40L by 2).map(k => (k, s"c$k", 3L, s"x$k"))
+      .toDF("k", "payload", "version", "extra"), "version", 3L)
+    // re-versioning onto a NEW column: current rows are adopted at
+    // version -1 and lose to any real batch version, beat a lower one
+    checkMerge(t, ((0L until 40L by 3).map(k => (k, s"d$k", 3L, s"y$k", 0L)) ++
+      Seq((1L, "loses", 3L, "z", -2L))).toDF("k", "payload", "version", "extra", "v2"),
+      "v2", 4L)
+    assert(n === 3)
+  }
+
+  test("shard fan-out: a failed shard write fails the publish by name; readers keep the old snapshot; the replay commits clean") {
+    val t = Files.createTempDirectory("graft-shardfail").toString + "/t"
+    val cols = Seq("k", "payload", "version")
+    def merge(df: org.apache.spark.sql.DataFrame, id: Long,
+              hook: Int => Unit = _ => ()): Unit =
+      EventStreams.mergeBatchIntoTable(df, t, Seq("k"), "version", nBuckets = 8,
+        batchId = id, statsCols = Some(Seq("k")), beforeShardRename = hook)
+    val initial = (0L until 64L).map(k => (k, s"a$k", 1L)).toDF(cols: _*)
+    merge(initial, 1L)
+    val batch = (0L until 64L by 2).map(k => (k, s"b$k", 2L)).toDF(cols: _*)
+    val before = multiset(EventStreams.readUpsertTable(spark, t), cols)
+    val manifests = new java.io.File(t, "_manifests")
+    def lists() = manifests.list().filter(_.endsWith(".json")).sorted.toSeq
+    val listsBefore = lists()
+    val victim = 3
+    val e = intercept[IllegalStateException] {
+      merge(batch, 2L, b => if (b == victim) throw new java.io.IOException("injected shard failure"))
+    }
+    assert(e.getMessage.contains(s"manifest shard write failed for bucket $victim of batch 2"),
+      e.getMessage)
+    assert(e.getCause.getMessage === "injected shard failure")
+    assert(lists() === listsBefore, "a failed shard write must publish no list file")
+    assert(EventStreams.latestCommittedBatchId(spark, t) === Some(1L))
+    assert(multiset(EventStreams.readUpsertTable(spark, t), cols) === before,
+      "readers keep the previous snapshot")
+    // the replay of the same batchId commits over the failed attempt's debris
+    merge(batch, 2L)
+    assert(EventStreams.latestCommittedBatchId(spark, t) === Some(2L))
+    assert(multiset(EventStreams.readUpsertTable(spark, t), cols) ===
+      multiset(initial.filter(col("k") % 2 === 1).unionByName(batch), cols))
+    val fsck = EventStreams.fsckUpsertTable(spark, t).collect()
+    assert(fsck.forall(_.getBoolean(1)), fsck.mkString("; "))
+    assert(fsck.exists(_.getString(0) == "no_orphan_shards"))
+    val shardFiles = new java.io.File(manifests, "shards").list().toSeq
+    assert(!shardFiles.exists(_.endsWith(".tmp")), s"no staged shard left: $shardFiles")
+  }
 }
