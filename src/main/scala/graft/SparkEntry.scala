@@ -384,8 +384,8 @@ object SparkEntry {
     val joined = native.join(recombined, Seq("doc_id"), "left")
       .select(coalesce(col("simhash"), lit(0L)).as("nat"),
         coalesce(col("builtin"), lit(0L)).as("bi"))
-    val n = joined.count()
-    val mismatches = joined.filter(col("nat") =!= col("bi")).count()
+    val counts = joined.agg(count(lit(1)), count(when(col("nat") =!= col("bi"), 1))).head()
+    val (n, mismatches) = (counts.getLong(0), counts.getLong(1))
     Seq(
       ("fingerprints_nonempty", n > 0),
       ("native_equals_builtin_rederivation", mismatches == 0L))
@@ -2277,11 +2277,8 @@ object SparkEntry {
       |SELECT doc_id, MIN(anchor) AS rep_id, MIN(hamming) AS hamming
       |FROM ver WHERE hamming <= 3 GROUP BY doc_id""".stripMargin
 
-  private def weatherBase(spark: SparkSession): DataFrame = {
-    val path = sources.WeatherFixture.ensure()
-    etl.WeatherETL.derived(etl.WeatherETL.cleaned(etl.WeatherETL.parsed(
-      Tables.weatherCsv(spark, path)))).filter(col("ts").isNotNull)
-  }
+  private def weatherBase(spark: SparkSession): DataFrame =
+    etl.WeatherETL.base(spark, sources.WeatherFixture.ensure())
 
   /** The §2.9 daily_weather output over the deterministic weather-CSV
     * fixture, hash-checked: the FULL reference pipeline — tz-offset

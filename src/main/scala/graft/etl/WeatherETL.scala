@@ -14,9 +14,18 @@ import graft.sources.Tables
   *
   * Stage map (reference cite -> here):
   *   extract  ETL.py:29-50  -> Tables.weatherCsv (explicit schema)
-  *   transform ETL.py:52-140 -> parsed|cleaned|derived|dailyAgg|monthlyAgg|enriched
-  *   validate ETL.py:142-201 -> validated (single-pass gate, not 9 scans)
+  *   transform ETL.py:52-140 -> base = parsed|cleaned|derived,
+  *                             materialized once per run, then the ts
+  *                             filter; dailyAgg|monthlyAgg|enriched over it
+  *   validate ETL.py:142-201 -> validatedDaily/validatedMonthly (one
+  *                             materializing pass each, checks observed
+  *                             on it, not 9 scans)
   *   load     ETL.py:203-285 -> loadDaily/loadMonthly (snake_case DDL schema)
+  *
+  * Passes per run: the CSV is scanned once, by `base`'s materialization
+  * (the in-plan median imputation reads the dedup shuffle it shares with
+  * the rows). Each gate materializes its aggregate once, and the outputs
+  * read the materialized frames.
   */
 object WeatherETL {
 
@@ -112,17 +121,30 @@ object WeatherETL {
 
   /** The whole pipeline; returns (daily_weather, monthly_weather).
     *
-    * Rows whose timestamp failed to parse are dropped after cleaning:
+    * Rows whose timestamp failed to parse are dropped after cleaning (in
+    * [[base]]):
     * pandas `groupby` silently drops NaN keys (dropna=True default), so
     * the reference's aggregates never see coerced-null dates — Spark's
     * groupBy would keep a null group; the filter restores parity.
     */
   def run(spark: SparkSession, csvPath: String): (DataFrame, DataFrame) = {
-    val base = derived(cleaned(parsed(Tables.weatherCsv(spark, csvPath))))
-      .filter(col("ts").isNotNull)
-    val daily = dailyAgg(base)
-    val dailyOut = loadDaily(enriched(validatedDaily(daily), base))
-    val monthlyOut = loadMonthly(validatedMonthly(monthlyAgg(base)))
+    val rows = base(spark, csvPath)
+    val dailyOut = loadDaily(enriched(validatedDaily(dailyAgg(rows)), rows))
+    val monthlyOut = loadMonthly(validatedMonthly(monthlyAgg(rows)))
     (dailyOut, monthlyOut)
   }
+
+  /** Extract + transform up to the hourly detail rows (parse -> dedup ->
+    * impute -> derive -> drop unparseable timestamps), materialized with
+    * `localCheckpoint()`: the daily and monthly branches, both gates and
+    * the enrichment join all read these rows, so the CSV is scanned once
+    * per run. The timestamp filter sits above the checkpoint: below it,
+    * Catalyst would push the filter under the dedup on the rows' side
+    * only, and the median aggregate (which must see the unparseable rows
+    * too) could no longer share the dedup exchange: two CSV scans.
+    */
+  def base(spark: SparkSession, csvPath: String): DataFrame =
+    derived(cleaned(parsed(Tables.weatherCsv(spark, csvPath))))
+      .localCheckpoint()
+      .filter(col("ts").isNotNull)
 }

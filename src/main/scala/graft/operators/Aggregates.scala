@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, FloatType, NumericType}
 
 /** Aggregation operators (SURVEY.md §2.4).
   *
@@ -64,11 +65,34 @@ object Aggregates {
     cols.zipWithIndex.collect { case (c, i) if !row.isNullAt(i) => c -> row.getDouble(i) }.toMap
   }
 
-  /** F5: median imputation = one agg pass + one fill pass (same two-pass
-    * shape as the pandas intent at ETL.py:61-62).
+  /** F5: median imputation (ETL.py:61-62 intent), in-plan: the medians
+    * are a one-row aggregate broadcast-cross-joined onto the rows, so the
+    * fill launches no eager job and the medians are computed by whatever
+    * action runs the plan (when `df` ends in a shuffle, the aggregate and
+    * the rows can reuse its one exchange). Same result as
+    * `df.na.fill(medians(df, cols))`: NaN counts as missing in float and
+    * double columns, an all-null column (null median) is left as it is,
+    * non-numeric columns are left alone, and every column keeps its type
+    * (the median is cast to it). Filled columns become nullable in the
+    * schema, since a median is only known at run time.
     */
-  def imputeMedians(df: DataFrame, cols: Seq[String]): DataFrame =
-    df.na.fill(medians(df, cols))
+  def imputeMedians(df: DataFrame, cols: Seq[String]): DataFrame = {
+    def ref(c: String) = df.col("`" + c.replace("`", "``") + "`")
+    val medianOf = cols.zipWithIndex.map { case (c, i) => c -> s"__median_$i" }.toMap
+    val aggs = cols.map(c => median(ref(c)).as(medianOf(c)))
+    val fills = df.crossJoin(broadcast(df.agg(aggs.head, aggs.tail: _*)))
+    fills.select(df.schema.fields.toSeq.map { f =>
+      medianOf.get(f.name) match {
+        case Some(m) if f.dataType.isInstanceOf[NumericType] =>
+          val v = f.dataType match {
+            case DoubleType | FloatType => nanvl(ref(f.name), lit(null))
+            case _ => ref(f.name)
+          }
+          coalesce(v, col(m).cast(f.dataType)).as(f.name)
+        case _ => ref(f.name)
+      }
+    }: _*)
+  }
 
   /** Distributed EXACT interpolated percentiles — the scale-safe
     * replacement for an UNGROUPED `percentile`/`median` aggregate

@@ -6,9 +6,10 @@ import org.apache.spark.sql.functions._
 /** Data-quality gate (SURVEY.md §2.7; reference ETL.py:142-201).
   *
   * The reference runs 9 separate full-table scans (one per check). Here the
-  * whole check set compiles into ONE aggregate job: each check becomes a
-  * conditional-count column, evaluated in a single pass (partial aggregation
-  * map-side — at 100 TB this is one scan, zero shuffle of raw rows).
+  * whole check set compiles into one set of conditional counts, one column
+  * per check, evaluated in a single pass: as an aggregate (`report`), or
+  * as observed metrics of the pass that materializes the gated frame
+  * (`enforce`, `observed`), which then costs no scan of its own.
   *
   * Failure semantics match the reference's fail-stop gate: `enforce` throws
   * `ValidationException` carrying a bounded sample of offending values (V5,
@@ -73,19 +74,29 @@ object Validation {
         failed.map(c => s"${c.name}: ${m(c.name)} violations").mkString("; "))
   }
 
-  /** Fail-stop gate: returns df if clean, else throws with samples. */
+  /** Fail-stop gate in one materializing pass. The checks ride along as
+    * [[observed]] metrics while `df` is `localCheckpoint()`-ed, so one
+    * action computes both the rows and the check counts. If any check saw
+    * violations it throws `ValidationException` with up to `sampleN`
+    * offending values per failed check (sampled from the materialized
+    * rows) before returning. Otherwise it returns the materialized frame:
+    * the same rows, read back from the checkpoint, so the gated plan never
+    * runs a second time downstream.
+    */
   def enforce(df: DataFrame, checks: Seq[Check], sampleN: Int = 5): DataFrame = {
-    val row = report(df, checks).head()
-    val failed = checks.filter(c => row.getAs[Long](c.name) > 0)
+    val (gated, obs) = observed(df, checks)
+    val materialized = gated.localCheckpoint()
+    val counts = obs.get
+    val failed = checks.filter(c => counts(c.name).asInstanceOf[Long] > 0)
     if (failed.nonEmpty) {
       val detail = failed.map { c =>
-        val sample = df.filter(c.violation).select(col(c.colNameOf)).limit(sampleN)
+        val sample = materialized.filter(c.violation).select(col(c.colNameOf)).limit(sampleN)
           .collect().map(_.get(0)).mkString(", ")
-        s"${c.name}: ${row.getAs[Long](c.name)} violations (sample: $sample)"
+        s"${c.name}: ${counts(c.name)} violations (sample: $sample)"
       }.mkString("; ")
       throw ValidationException(s"validation failed — $detail")
     }
-    df
+    materialized
   }
 
   implicit private class CheckCol(private val c: Check) extends AnyVal {

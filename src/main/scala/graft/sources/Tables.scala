@@ -1,5 +1,11 @@
 package graft.sources
 
+import java.io.FileNotFoundException
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -17,9 +23,77 @@ object Tables {
   /** Parquet scan for a driver testdata table. Column pruning and predicate
     * pushdown happen automatically because every downstream operator is
     * declarative (check `.explain`: PushedFilters / ReadSchema).
+    *
+    * The schema is inferred once per session and the scan reads with
+    * `.schema(s)`: inference reads footers in a Spark job at build time,
+    * which every query paid on every table read, every call. The same
+    * schema gives the same relation, so plans are unchanged. The cache key
+    * is what decides the inferred schema:
+    *   - the path;
+    *   - the session confs that change what inference returns
+    *     ([[InferenceConfs]]; `events` flips nanosAsLong, which turns
+    *     TIMESTAMP(NANOS) into LongType);
+    *   - the leaf-file listing (name, length, mtime), so a table rewritten
+    *     in place, even with another schema, is inferred again.
+    * Entries hang off their session through weak keys and are dropped once
+    * its SparkContext stops: a new session infers again, and the cache
+    * keeps no session, stopped or not, reachable. A path that does not
+    * list falls through to a plain read, so its error stays Spark's own.
     */
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    leafFiles(spark, path) match {
+      case Some(files) =>
+        val key = SchemaKey(path, InferenceConfs.map(spark.conf.getOption), files)
+        val cache = sessionSchemas(spark)
+        val schema = Option(cache.get(key)).getOrElse {
+          val s = spark.read.parquet(path).schema
+          Option(cache.putIfAbsent(key, s)).getOrElse(s)
+        }
+        spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+  }
+
+  /** Session confs that change the schema parquet inference returns. */
+  private val InferenceConfs: Seq[String] = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  private final case class SchemaKey(
+      path: String, confs: Seq[Option[String]], files: Seq[(String, Long, Long)])
+
+  private val schemas =
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[SchemaKey, StructType]]()
+
+  private def sessionSchemas(spark: SparkSession): ConcurrentHashMap[SchemaKey, StructType] =
+    schemas.synchronized {
+      schemas.keySet.removeIf(_.sparkContext.isStopped)
+      schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap[SchemaKey, StructType]())
+    }
+
+  /** Sessions that currently hold cached schemas (for tests). */
+  private[graft] def schemaCacheSessions: Seq[SparkSession] =
+    schemas.synchronized(schemas.keySet.asScala.toSeq)
+
+  /** (path, length, mtime) of every file under `path`, sorted; None when
+    * the path does not exist.
+    */
+  private def leafFiles(spark: SparkSession, path: String): Option[Seq[(String, Long, Long)]] = {
+    val p = new Path(path)
+    try {
+      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+      val files = Seq.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      Some(files.result().sorted)
+    } catch { case _: FileNotFoundException => None }
+  }
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "lineitem")
   def orders(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "orders")

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 import graft.operators.Aggregates
 
 final case class TopKRec(g: String, v: Int)
@@ -90,6 +91,27 @@ class AggregatesSpec extends SparkSpec {
     val got = Aggregates.imputeMedians(df, Seq("a"))
       .collect().map(_.getDouble(0)).sorted.toSeq
     assert(got === Seq(1.0, 2.0, 3.0))
+  }
+
+  test("in-plan imputeMedians ≡ na.fill(medians): NaN cell, all-null column, typed column, no eager job") {
+    val df = Seq(
+      (Option(1.0), Option.empty[Double], Option(1), "a"),
+      (Option(Double.NaN), Option.empty[Double], Option.empty[Int], "b"),
+      (None, Option.empty[Double], Option(4), null),
+      (Option(3.0), Option.empty[Double], Option(2), "c"),
+      (Option(8.0), Option.empty[Double], Option(7), "d")
+    ).toDF("x", "all_null", "n", "s")
+    val cols = Seq("x", "all_null", "n")
+    var got: org.apache.spark.sql.DataFrame = null
+    assert(JobTrace(spark) { got = Aggregates.imputeMedians(df, cols) }.jobs === 0)
+    val expected = df.na.fill(Aggregates.medians(df, cols))
+    assert(got.schema.map(f => f.name -> f.dataType) === expected.schema.map(f => f.name -> f.dataType))
+    assert(got.schema("n").dataType === IntegerType)
+    def rows(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.toString).sorted.toSeq
+    assert(rows(got) === rows(expected))
+    // the NaN and the null in x both took x's median; all_null stayed null
+    assert(got.filter(col("s").isin("b") || col("s").isNull).collect()
+      .forall(r => r.isNullAt(1) && !r.getDouble(0).isNaN))
   }
 
   test("daily/monthly agg skip nulls in avg like pandas mean") {

@@ -1,0 +1,65 @@
+package graft
+
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
+import org.apache.spark.sql.util.QueryExecutionListener
+
+/** What a block of code ran on Spark: its jobs, and the CSV file
+  * scans in the final plans of the queries it executed (a reused exchange
+  * is not scanned again, so it does not count).
+  */
+final case class JobTrace(jobs: Int, csvScans: Int)
+
+object JobTrace extends AdaptiveSparkPlanHelper {
+
+  /** Runs `f` under its own job group and counts its jobs and CSV scans.
+    * Listener events arrive asynchronously, so a marker job under a
+    * second group runs last: the listeners sit on the bus's shared queue,
+    * which delivers in order, so once the marker's start is seen every
+    * earlier event is in.
+    */
+  def apply(spark: SparkSession)(f: => Unit): JobTrace = {
+    val group = s"job-trace-${System.nanoTime()}"
+    val marker = s"$group-marker"
+    val jobs = new AtomicInteger()
+    val plans = new ConcurrentLinkedQueue[QueryExecution]()
+    @volatile var markerSeen = false
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`marker`) => markerSeen = true
+          case _ =>
+        }
+    }
+    val qeListener = new QueryExecutionListener {
+      override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe)
+      override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = plans.add(qe)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(qeListener)
+    try {
+      sc.setJobGroup(group, group)
+      try f finally sc.clearJobGroup()
+      sc.setJobGroup(marker, marker)
+      try spark.range(1).rdd.count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(markerSeen, "listener bus did not deliver the marker job")
+    } finally {
+      sc.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(qeListener)
+    }
+    val csvScans = plans.toArray(Array.empty[QueryExecution]).toSeq.map(qe => collect(qe.executedPlan) {
+      case s: FileSourceScanExec if s.relation.fileFormat.isInstanceOf[CSVFileFormat] => s
+    }.size).sum
+    JobTrace(jobs.get(), csvScans)
+  }
+}

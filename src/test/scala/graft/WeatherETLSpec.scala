@@ -80,6 +80,25 @@ class WeatherETLSpec extends SparkSpec {
     assert(monthlyBack.filter(col("m") === 4).count() === 1) // partition pruning path
   }
 
+  /** Pins the Spark jobs of one run plus both outputs' collect, as
+    * measured (15 in all). The base: the dedup map stage (shared by the
+    * rows and the median aggregate), the median's map stage and
+    * broadcast, its checkpoint (4). The daily gate: its aggregate's map
+    * stage and checkpoint (2). The monthly gate: the map stages and join
+    * of its means and mode, its checkpoint (5). The daily collect: the
+    * detail dedup, the enrichment join, the result (3). The monthly
+    * collect reads its checkpoint (1). Only the base reads the CSV.
+    */
+  test("one pipeline run scans the CSV once: pinned job count") {
+    var out: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = null
+    assert(JobTrace(spark) { WeatherETL.base(spark, csv) } === JobTrace(jobs = 4, csvScans = 1))
+    assert(JobTrace(spark) { out = WeatherETL.run(spark, csv) } === JobTrace(jobs = 11, csvScans = 1))
+    var rows = 0
+    assert(JobTrace(spark) { rows += out._1.collect().length } === JobTrace(jobs = 3, csvScans = 0))
+    assert(JobTrace(spark) { rows += out._2.collect().length } === JobTrace(jobs = 1, csvScans = 0))
+    assert(rows === 7)
+  }
+
   test("validation gate trips on out-of-range data") {
     import spark.implicits._
     val bad = Seq((60.0, 0.5, 3.0)).toDF("temperature_c", "humidity", "wind_speed_kmh")
