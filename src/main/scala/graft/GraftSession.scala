@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.SparkSession
 
 /** Single place where engine session policy is decided (SURVEY.md §7):
@@ -14,6 +16,11 @@ import org.apache.spark.sql.SparkSession
   *   - shuffle partitions default to the local core count for the test
   *     harness; on a real cluster this is overridden by the submitter (AQE
   *     coalescing makes the initial number non-critical).
+  *   - a per-process warehouse: layout queries (q104/q116/...) saveAsTable
+  *     by fixed names, so a shared ./spark-warehouse would let a concurrent
+  *     JVM clobber this process's table files mid-read.
+  *
+  * Every main and the test session build their session here.
   */
 object GraftSession {
   def builder(master: String = s"local[${defaultCpus}]"): SparkSession.Builder =
@@ -28,12 +35,13 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.warehouse.dir", warehouseDir)
 
   def defaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 
-  def get(): SparkSession = {
-    val spark = builder().getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+  /** Created once per JVM. The `graft-bench-wh` prefix is what Bench's
+    * plan canonicalization rewrites out of scan locations.
+    */
+  private lazy val warehouseDir: String =
+    Files.createTempDirectory("graft-bench-wh").toString
 }

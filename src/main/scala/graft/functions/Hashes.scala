@@ -21,14 +21,6 @@ object Hashes {
   def minhashSignature(shingles: Column, k: Int): Column =
     graft.plans.MinHashSig.minhashSig(shingles, k)
 
-  /** LSH band keys: the signature split into `bands` slices of length
-    * `rows`, each slice hashed to one long. Docs sharing ANY band key are
-    * candidate near-dups — the join key for the bucket self-join.
-    */
-  def lshBandKeys(signature: Column, bands: Int, rows: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)),
-      b => xxhash64(slice(signature, b * rows + 1, lit(rows)), b))
-
   /** Jaccard similarity of two string arrays as SETS (array_intersect /
     * array_union both dedup — mirrors DuckDB list_intersect semantics).
     */

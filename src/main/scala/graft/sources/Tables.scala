@@ -98,7 +98,6 @@ object Tables {
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "lineitem")
   def orders(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "orders")
   def customer(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "customer")
-  def supplier(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "supplier")
   def part(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "part")
   def nation(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "nation")
   def region(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "region")

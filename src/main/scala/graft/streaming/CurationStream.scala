@@ -312,23 +312,6 @@ object CurationStream {
       nBuckets = 1, batchId = batchId)
   }
 
-  /** The streaming wrapper for [[driftShard]] (`Trigger.AvailableNow`,
-    * the [[start]] convention): gate-serving pipelines run this beside
-    * [[startGating]] so every drained shard leaves a drift row.
-    */
-  def startDriftMonitor(spark: SparkSession, corpusDir: String,
-                        schema: StructType, modelRoot: String,
-                        driftDir: String,
-                        checkpointDir: String): StreamingQuery =
-    spark.readStream.schema(schema).parquet(corpusDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        driftShard(batch, modelRoot, driftDir, batchId)
-      }
-      .start()
-
   /** GATE one arriving shard with the fully-served calibrated ensemble
     * (`Models.serveEnsembleGate` — committed LM/LR models + committed
     * per-language cuts) and upsert the per-doc decisions. The frozen

@@ -139,30 +139,6 @@ object FeedStream {
       .start()
   }
 
-  /** CONTINUOUS rollup sync — the [[startReplicaSyncContinuous]]
-    * contract for the incremental aggregate view.
-    */
-  def startRollupSyncContinuous(spark: SparkSession, srcDir: String,
-                                rollupDir: String, consumer: String,
-                                spec: EventStreams.RollupSpec, nBuckets: Int,
-                                checkpointDir: String,
-                                intervalMs: Long = 500,
-                                maxCommitsPerBatch: Int = 16,
-                                retain: Int = 1): StreamingQuery = {
-    require(maxCommitsPerBatch >= 1,
-      s"maxCommitsPerBatch must be >= 1, got $maxCommitsPerBatch")
-    manifestStream(spark, srcDir, maxCommitsPerBatch)
-      .writeStream
-      .trigger(Trigger.ProcessingTime(intervalMs))
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (_: DataFrame, _: Long) =>
-        EventStreams.syncRollupFromFeed(spark, srcDir, rollupDir, consumer,
-          spec, nBuckets, retain, maxCommits = maxCommitsPerBatch)
-        ()
-      }
-      .start()
-  }
-
   /** Drain the source's unconsumed commits into the composed IVF-PQ
     * serving index ([[graft.operators.Similarity.syncIndexFromFeed]]
     * — O(changed window) upserts/removals, never a table re-scan) and
@@ -183,27 +159,4 @@ object FeedStream {
         ()
       }
       .start()
-
-  /** CONTINUOUS index sync — the [[startReplicaSyncContinuous]]
-    * contract for the composed IVF-PQ serving index, completing the
-    * standing-consumer trio (replica, rollup view, index).
-    */
-  def startIndexSyncContinuous(spark: SparkSession, srcDir: String,
-                               indexDir: String, consumer: String,
-                               checkpointDir: String,
-                               intervalMs: Long = 500,
-                               maxCommitsPerBatch: Int = 16): StreamingQuery = {
-    require(maxCommitsPerBatch >= 1,
-      s"maxCommitsPerBatch must be >= 1, got $maxCommitsPerBatch")
-    manifestStream(spark, srcDir, maxCommitsPerBatch)
-      .writeStream
-      .trigger(Trigger.ProcessingTime(intervalMs))
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (_: DataFrame, _: Long) =>
-        graft.operators.Similarity.syncIndexFromFeed(spark, srcDir,
-          indexDir, consumer, maxCommits = maxCommitsPerBatch)
-        ()
-      }
-      .start()
-  }
 }

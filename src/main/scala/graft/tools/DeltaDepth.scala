@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.streaming.EventStreams
@@ -24,15 +23,7 @@ object DeltaDepth {
     val k = if (args.length > 1) args(1).toInt else 10
     val depths = if (args.length > 2) args(2).split(",").map(_.toInt).toSeq
       else Seq(1, 2, 4, 8, 16, 32)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val dir = ScaleCurve.ensureScaled(spark, outBase, k)
     val base = java.nio.file.Files

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.streaming.EventStreams
@@ -29,15 +28,7 @@ object RetentionScale {
     val outBase = args.headOption.getOrElse("/root/repo/target/scale")
     val scales = if (args.length > 1) args(1).split(",").map(_.toInt).toSeq
       else Seq(1, 5, 10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     println("| scale | rows | live files | sync s | recompute s | delete s | dropped | rewritten | carried |")
     println("| --- | --- | --- | --- | --- | --- | --- | --- | --- |")

@@ -32,15 +32,7 @@ object ScaleCurve {
     val outBase = args.headOption.getOrElse("/root/repo/target/scale")
     val only: Option[Set[String]] =
       if (args.length > 1) Some(args(1).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def ensureScaled(k: Int): String = ScaleCurve.ensureScaled(spark, outBase, k)

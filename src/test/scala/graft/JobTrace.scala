@@ -1,12 +1,14 @@
 package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -18,22 +20,42 @@ final case class JobTrace(jobs: Int, csvScans: Int)
 
 object JobTrace extends AdaptiveSparkPlanHelper {
 
-  /** Runs `f` under its own job group and counts its jobs and CSV scans.
-    * Listener events arrive asynchronously, so a marker job under a
-    * second group runs last: the listeners sit on the bus's shared queue,
-    * which delivers in order, so once the marker's start is seen every
-    * earlier event is in.
+  /** The ids of the jobs a block ran, and the executed plans of its
+    * parquet (file-source) writes.
     */
+  final case class Detail(jobIds: Seq[Int], writes: Seq[SparkPlan])
+
+  /** Runs `f` under its own job group and counts its jobs and CSV scans. */
   def apply(spark: SparkSession)(f: => Unit): JobTrace = {
+    val (jobIds, plans) = run(spark)(f)
+    JobTrace(jobIds.size, plans.map(qe => collect(qe.executedPlan) {
+      case s: FileSourceScanExec if s.relation.fileFormat.isInstanceOf[CSVFileFormat] => s
+    }.size).sum)
+  }
+
+  /** Runs `f` under its own job group and returns its job ids and writes. */
+  def detail(spark: SparkSession)(f: => Unit): Detail = {
+    val (jobIds, plans) = run(spark)(f)
+    Detail(jobIds, plans.collect {
+      case qe if qe.analyzed.isInstanceOf[InsertIntoHadoopFsRelationCommand] => qe.executedPlan
+    })
+  }
+
+  /** The job ids and query executions of `f`. Listener events arrive
+    * asynchronously, so a marker job under a second group runs last: the
+    * listeners sit on the bus's shared queue, which delivers in order, so
+    * once the marker's start is seen every earlier event is in.
+    */
+  private def run(spark: SparkSession)(f: => Unit): (Seq[Int], Seq[QueryExecution]) = {
     val group = s"job-trace-${System.nanoTime()}"
     val marker = s"$group-marker"
-    val jobs = new AtomicInteger()
+    val jobs = new ConcurrentLinkedQueue[Int]()
     val plans = new ConcurrentLinkedQueue[QueryExecution]()
     @volatile var markerSeen = false
     val jobListener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`group`) => jobs.add(e.jobId)
           case Some(`marker`) => markerSeen = true
           case _ =>
         }
@@ -57,9 +79,6 @@ object JobTrace extends AdaptiveSparkPlanHelper {
       sc.removeSparkListener(jobListener)
       spark.listenerManager.unregister(qeListener)
     }
-    val csvScans = plans.toArray(Array.empty[QueryExecution]).toSeq.map(qe => collect(qe.executedPlan) {
-      case s: FileSourceScanExec if s.relation.fileFormat.isInstanceOf[CSVFileFormat] => s
-    }.size).sum
-    JobTrace(jobs.get(), csvScans)
+    (jobs.asScala.toSeq, plans.asScala.toSeq)
   }
 }

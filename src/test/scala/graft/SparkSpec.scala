@@ -8,19 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 object SharedSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    // the suite's specs pin counts (jobs, partitions) measured at 4
+    // local cores, whatever SPARK_GRAFT_CPUS the run exports
+    val s = GraftSession.builder("local[4]")
       .appName("graft-test")
-      // full engine surface incl. the post-hoc SQL-write rule (which
-      // has no runtime injection point, unlike functions/strategies)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // per-process warehouse (same rationale as Bench/Verify: fixed-name
-      // layout tables must not be shared across concurrent JVMs)
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-test-wh").toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     // same engine surface as Verify/Bench: functions, optimizer rule,

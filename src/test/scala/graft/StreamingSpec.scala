@@ -3581,56 +3581,6 @@ class StreamingSpec extends SparkSpec {
   private def multiset(df: org.apache.spark.sql.DataFrame, cols: Seq[String]): Seq[String] =
     df.select(cols.map(col): _*).collect().map(_.toSeq.mkString("|")).toSeq.sorted
 
-  /** Jobs, and the executed plans of parquet writes, that `f` launches
-    * under its own job group. Listener events arrive asynchronously, so
-    * a marker job under a second group is run last: both listeners sit
-    * on the bus's shared queue, which delivers in order, so once the
-    * marker's start is seen every earlier event is in.
-    */
-  private def traced(group: String)(f: => Unit)
-      : (Seq[Int], Seq[org.apache.spark.sql.execution.SparkPlan]) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    val writes = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.execution.SparkPlan]()
-    @volatile var markerSeen = false
-    val marker = s"$group-marker"
-    val jobListener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.add(e.jobId)
-          case Some(`marker`) => markerSeen = true
-          case _ =>
-        }
-    }
-    val qeListener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(fn: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                             ns: Long): Unit = qe.analyzed match {
-        case _: org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand =>
-          writes.add(qe.executedPlan)
-        case _ =>
-      }
-      override def onFailure(fn: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                             e: Exception): Unit = ()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(jobListener)
-    spark.listenerManager.register(qeListener)
-    try {
-      sc.setJobGroup(group, group)
-      try f finally sc.clearJobGroup()
-      sc.setJobGroup(marker, marker)
-      try spark.range(1).rdd.count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(markerSeen, "listener bus did not deliver the marker job")
-    } finally {
-      sc.removeSparkListener(jobListener)
-      spark.listenerManager.unregister(qeListener)
-    }
-    (jobs.toArray.map(_.asInstanceOf[Int]).toSeq, writes.toArray.toSeq
-      .map(_.asInstanceOf[org.apache.spark.sql.execution.SparkPlan]))
-  }
-
   test("eager merge shape: one exchange on the bucket, one file per bucket, exact zone maps, pinned job count") {
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -3641,7 +3591,7 @@ class StreamingSpec extends SparkSpec {
     EventStreams.mergeBatchIntoTable(rows(0 until 400, 0L), t, Seq("k"), "version",
       nBuckets = 8, batchId = 1L, statsCols = Some(Seq("k", "payload")))
     // corrections of existing keys plus new keys, every bucket touched
-    val (jobs, writePlans) = traced("graft-merge-shape") {
+    val JobTrace.Detail(jobs, writePlans) = JobTrace.detail(spark) {
       EventStreams.mergeBatchIntoTable(rows(300 until 500, 1L), t, Seq("k"), "version",
         nBuckets = 8, batchId = 2L)
     }
