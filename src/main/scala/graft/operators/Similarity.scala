@@ -1199,8 +1199,7 @@ object Similarity {
     */
   def syncIndexFromFeed(spark: org.apache.spark.sql.SparkSession,
                         srcDir: String, indexDir: String,
-                        consumer: String,
-                        maxCommits: Int = 0): Option[(Long, Long, Long, Long)] = {
+                        consumer: String): Option[(Long, Long, Long, Long)] = {
     import graft.streaming.EventStreams
     val from = EventStreams.feedCursor(spark, srcDir, consumer).getOrElse(
       throw new IllegalStateException(
@@ -1211,10 +1210,7 @@ object Similarity {
     if (wm == from) return None
     require(wm > from,
       s"$srcDir's watermark $wm is behind the cursor $from — resync")
-    // bounded window for continuous serving (round 16): see
-    // EventStreams.syncReplicaFromFeed
-    val to = EventStreams.boundedFeedTarget(spark, srcDir, from, wm, maxCommits)
-    val feed = EventStreams.readChangeFeed(spark, srcDir, from, Some(to))
+    val feed = EventStreams.readChangeFeed(spark, srcDir, from, Some(wm))
       .localCheckpoint()
     val ups = feed.filter(col(EventStreams.changeTypeCol) === "upsert")
       .drop(EventStreams.changeTypeCol)
@@ -1222,9 +1218,9 @@ object Similarity {
     val touched = feed.select(col("vec_id")).distinct()
       .collect().map(_.getLong(0)).toSeq
     val nDels = feed.filter(col(EventStreams.changeTypeCol) === "delete").count()
-    upsertIntoIvfPqIndex(ups, touched, indexDir, batchId = to)
-    EventStreams.advanceFeedCursor(spark, srcDir, consumer, to)
-    Some((from, to, touched.size - nDels, nDels))
+    upsertIntoIvfPqIndex(ups, touched, indexDir, batchId = wm)
+    EventStreams.advanceFeedCursor(spark, srcDir, consumer, wm)
+    Some((from, wm, touched.size - nDels, nDels))
   }
 
   /** The codes manifest's applied-batch high-water mark and live dirs,

@@ -1,7 +1,8 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.util.Locale
+import java.util.{Arrays, Locale, UUID}
 
 /** Deterministic Kaggle-weatherHistory-shaped CSV fixture (the
   * reference's own input format — /root/reference/ETL.py:31-40 — which
@@ -47,15 +48,27 @@ object WeatherFixture {
       visibility, "0.0", pressure, "Synthetic conditions.").mkString(",")
   }
 
-  /** Writes the fixture (atomically, idempotently) and returns its path. */
-  def ensure(): String = synchronized {
+  private lazy val bytes: Array[Byte] = {
     val base = for (d <- 0 until 12; h <- 0 until 24) yield row(d, h)
     val dups = for (d <- 0 until 12) yield row(d, 3)
-    val csv = (Header +: (base ++ dups)).mkString("", "\n", "\n")
-    val tmp = Paths.get(Path + ".tmp")
-    Files.writeString(tmp, csv)
-    Files.move(tmp, Paths.get(Path), StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
+    (Header +: (base ++ dups)).mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8)
+  }
+
+  /** Writes the fixture (atomically, idempotently) and returns its path.
+    * A file that already holds the expected bytes is left alone; any
+    * other is replaced through a temp file unique to this call, so JVMs
+    * writing at once never move each other's half-written file in.
+    */
+  def ensure(): String = synchronized {
+    val target = Paths.get(Path)
+    if (!(Files.isRegularFile(target) && Arrays.equals(Files.readAllBytes(target), bytes))) {
+      val tmp = Paths.get(s"$Path.${UUID.randomUUID}.tmp")
+      try {
+        Files.write(tmp, bytes)
+        Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING,
+          StandardCopyOption.ATOMIC_MOVE)
+      } finally Files.deleteIfExists(tmp)
+    }
     Path
   }
 }

@@ -5,8 +5,10 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions.{col, lit}
 
@@ -29,7 +31,10 @@ import graft.{Bench, GraftSession, SparkEntry}
   *   - `plan`: the canonical optimized plan and hash Bench records, after
   *     Bench's warm-up and timed reps — for diffing plan-hash changes.
   *   - `show`: the query's rows (verdict queries' booleans).
-  *   - `time`: Bench's timing, best and every rep.
+  *   - `time`: Bench's timing, best and every rep, and the codegen
+  *     classes the timed reps compiled with their compile milliseconds:
+  *     0 when the query's generated code is the same on every build and
+  *     Spark's codegen cache holds it.
   *   - `prof`: `time`, plus every Spark job of the timed reps: wall time,
   *     gap since the previous job's end, tasks and description.
   *
@@ -82,12 +87,16 @@ object Run {
     names.foreach { name =>
       def build(): DataFrame =
         extras.get(name).map(_(spark, sfDir)).getOrElse(SparkEntry.queries(name)(spark, sfDir))
-      // Bench's loop: an untimed warm-up run, then the timed reps
-      def timed(): (Seq[Double], DataFrame) = {
+      // Bench's loop: an untimed warm-up run, then the timed reps, with
+      // the codegen compiles of the timed reps
+      def timed(): (Seq[Double], DataFrame, Compiles) = {
         Bench.materialize(SparkEntry.queries(name)(spark, sfDir))
         spark.sparkContext.setLocalProperty(queryKey, name)
-        try Bench.timedRuns(spark, sfDir, name)
-        finally spark.sparkContext.setLocalProperty(queryKey, null)
+        val before = Compiles.now()
+        try {
+          val (times, last) = Bench.timedRuns(spark, sfDir, name)
+          (times, last, Compiles.now() - before)
+        } finally spark.sparkContext.setLocalProperty(queryKey, null)
       }
       try cmd match {
         case "explain" =>
@@ -103,14 +112,26 @@ object Run {
           print(s"##### $name ${Bench.planHash(plan)}\n$plan")
         case "show" => build().show(500, truncate = false)
         case _ =>
-          val times = timed()._1
-          println(f"[time] $name%-30s best ${times.min}%.4f  all ${times.map(t => f"$t%.3f").mkString(",")}")
+          val (times, _, cg) = timed()
+          println(f"[time] $name%-30s best ${times.min}%.4f  all ${times.map(t => f"$t%.3f").mkString(",")}" +
+            f"  compiles ${cg.classes}%d ${cg.millis}%.1f ms")
           jobs.foreach(_.report(name))
       } catch { case e: Throwable =>
         System.err.println(s"[run] $name failed: ${Bench.describe(e)}")
       } finally Bench.clearSweepState(spark)
     }
     spark.stop()
+  }
+
+  /** Codegen compiles in this JVM, driver and local executors alike:
+    * classes compiled (cache misses) and the milliseconds Janino spent.
+    */
+  private final case class Compiles(classes: Long, millis: Double) {
+    def -(o: Compiles): Compiles = Compiles(classes - o.classes, millis - o.millis)
+  }
+  private object Compiles {
+    def now(): Compiles =
+      Compiles(CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime / 1e6)
   }
 
   private final case class Job(id: Int, query: String, start: Long, end: Long,
