@@ -149,7 +149,26 @@ object Bench {
     s"${e.getClass.getName}: " +
       String.valueOf(e.getMessage).linesIterator.find(_.trim.nonEmpty).getOrElse("")
 
-  private final case class Result(seconds: Double, hash: String, plan: String, tasks: Long)
+  /** A JSON string literal: backslash, quote and every control char
+    * escaped (a tab or CR in builder-authored SQL, or a newline in an
+    * exception message, would otherwise break the line's parse).
+    */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** A JSON object of string values, in the given order. */
+  private[graft] def jsonObject(entries: Seq[(String, String)]): String =
+    entries.map { case (k, v) => s"${jsonString(k)}:${jsonString(v)}" }.mkString("{", ",", "}")
+
+  private final case class Result(seconds: Double, hash: String, plan: String, tasks: Long,
+                                  error: Option[String] = None)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -185,7 +204,7 @@ object Bench {
           Result(times.min, planHash(plan), plan, taskCounter.get() - tasks0)
         } catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${describe(e)}")
-          Result(-1.0, "err", "", 0L)
+          Result(-1.0, "err", "", 0L, Some(describe(e)))
         } finally clearSweepState(spark)
       name -> r
     }
@@ -197,8 +216,11 @@ object Bench {
     val total = results.map(_._2.seconds).filter(_ > 0).sum
     val head = s""""metric":"total","value":${r4(total)},"unit":"sec""""
     val setup = s""""cpus":$cpus,"parallelism":${spark.sparkContext.defaultParallelism}"""
+    // each failed query's `describe` line: the failure is in the artifact,
+    // not only in a stderr line that can land inside a log4j stack trace
+    val errors = s""""errors":${jsonObject(results.flatMap { case (k, r) => r.error.map(k -> _) })}"""
     val json = s"""{$head,$setup,"queries":${obj(r => r4(r.seconds))},""" +
-      s""""plans":${obj(r => "\"" + r.hash + "\"")},"tasks":${obj(_.tasks.toString)},"sf":"$sfDir"}"""
+      s""""plans":${obj(r => "\"" + r.hash + "\"")},"tasks":${obj(_.tasks.toString)},$errors,"sf":"$sfDir"}"""
     // stdout FIRST: the artifact writes below can fail on a read-only
     // checkout / bad override path, and the JSON line is the one output
     // the driver must always get
@@ -224,7 +246,7 @@ object Bench {
     // keeps a bounded tail, and the full per-query JSON above is ~10 KB —
     // long enough that BENCH_r07.json recorded "parsed": null
     val n = results.count(_._2.seconds > 0)
-    println(s"""{$head,"n":$n,$setup,"sf":"$sfDir"}""")
+    println(s"""{$head,"n":$n,$setup,$errors,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

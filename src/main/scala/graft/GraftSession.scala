@@ -35,6 +35,15 @@ import org.apache.spark.sql.SparkSession
   *     It is a static conf, read once when Spark's `CodeGenerator` first
   *     initializes, so it must be set before any session runs a query —
   *     which this builder is.
+  *   - a `file:` filesystem that sets file modes in-process
+  *     ([[graft.io.LocalFs]]). Without the native `libhadoop`, Hadoop's
+  *     stock `LocalFileSystem` forks a `chmod` process for every file it
+  *     creates (data file and `.crc`) and every directory it makes: about
+  *     96 forks per eager upsert merge, and 8.4 ms per `fs.create` against
+  *     0.63 ms in-process. Files, bytes and modes on disk are the same.
+  *     Hadoop's `FileSystem.CACHE` is keyed without the conf, so the first
+  *     `file:` lookup in a JVM fixes the class for the whole JVM: nothing
+  *     may look up a `file:` filesystem before a session is built here.
   *
   * Every main and the test session build their session here.
   */
@@ -53,6 +62,7 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", codegenCacheEntries.toString)
       .config("spark.sql.warehouse.dir", warehouseDir)
+      .config("spark.hadoop.fs.file.impl", classOf[graft.io.LocalFs].getName)
 
   def defaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 

@@ -685,10 +685,16 @@ object Dedup {
       col("doc_id").as("anchor") +: slotCols.map(c => col(c).as(c + "_a")): _*)
     val bSigs = all.select(
       col("doc_id") +: slotCols.map(c => col(c).as(c + "_b")): _*)
+    // agreeing slots = nSlots minus the disagreeing ones, as a chain of
+    // subtractions: the filter below lands in the join condition, and a
+    // sum of 3+ terms canonicalizes to a MultiCommutativeOp whose hash
+    // includes a Class's identity hash, so the canonical plan ordered
+    // that condition differently in every JVM
     cand.join(aSigs, Seq("anchor")).join(bSigs, Seq("doc_id"))
       .withColumn("n_agree",
-        slotCols.map(c => when(col(c + "_a") === col(c + "_b"), 1).otherwise(0))
-          .reduce(_ + _))
+        slotCols.foldLeft(lit(nSlots)) { (n, c) =>
+          n - when(col(c + "_a") === col(c + "_b"), 0).otherwise(1)
+        })
       .filter(col("n_agree") >= minAgree)
       .groupBy(col("doc_id"))
       .agg(min(col("anchor")).as("rep_id"), max(col("n_agree")).as("n_agree"))

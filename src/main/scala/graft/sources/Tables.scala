@@ -5,7 +5,7 @@ import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -80,19 +80,19 @@ object Tables {
     schemas.synchronized(schemas.keySet.asScala.toSeq)
 
   /** (path, length, mtime) of every file under `path`, sorted; None when
-    * the path does not exist.
+    * the path does not exist. Walked with `listStatus`, not `listFiles`:
+    * the `LocatedFileStatus` that `listFiles` builds reads each file's
+    * permissions, which on a local path without native `libhadoop` forks
+    * an `ls -ld` per file.
     */
   private def leafFiles(spark: SparkSession, path: String): Option[Seq[(String, Long, Long)]] = {
     val p = new Path(path)
-    try {
-      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
-      val files = Seq.newBuilder[(String, Long, Long)]
-      while (it.hasNext) {
-        val f = it.next()
-        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
-      }
-      Some(files.result().sorted)
-    } catch { case _: FileNotFoundException => None }
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def walk(s: FileStatus): Seq[(String, Long, Long)] =
+      if (s.isDirectory) fs.listStatus(s.getPath).toSeq.flatMap(walk)
+      else Seq((s.getPath.toString, s.getLen, s.getModificationTime))
+    try Some(walk(fs.getFileStatus(p)).sorted)
+    catch { case _: FileNotFoundException => None }
   }
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "lineitem")

@@ -456,9 +456,22 @@ object EventStreams {
         graft.operators.Load.upsertLatest(
           alignTo(legacy, compacted, versionCol), compacted, keyCols, versionCol)
       }
-    // bounded collect: at most nBuckets small ints
-    val batchTouched = toMerge.select(upsertBucketCol).distinct()
-      .collect().map(_.getInt(0))
+    // bounded collect: at most nBuckets small ints. Without a legacy
+    // fold, the buckets of the raw batch are those of `compacted`
+    // (upsertLatest keeps every key group), so one job over the batch
+    // collects a per-partition set — no distinct shuffle, no rerun of
+    // the compaction's shuffle
+    val batchTouched =
+      if (legacyFiles.nonEmpty)
+        toMerge.select(upsertBucketCol).distinct().collect().map(_.getInt(0))
+      else
+        batch.select(bucketOf).queryExecution.toRdd
+          .mapPartitions { rows =>
+            val seen = scala.collection.mutable.BitSet.empty
+            rows.foreach(r => seen += r.getInt(0))
+            Iterator.single(seen.toArray)
+          }
+          .collect().flatten
     val touched =
       (if (homogenize) batchTouched ++ live.keys else batchTouched)
         .distinct.sorted

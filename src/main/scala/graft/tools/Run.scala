@@ -5,6 +5,9 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 import scala.jdk.CollectionConverters._
 
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
+
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -34,7 +37,8 @@ import graft.{Bench, GraftSession, SparkEntry}
   *   - `time`: Bench's timing, best and every rep, and the codegen
   *     classes the timed reps compiled with their compile milliseconds:
   *     0 when the query's generated code is the same on every build and
-  *     Spark's codegen cache holds it.
+  *     Spark's codegen cache holds it; then the child processes the
+  *     timed reps started (`forks`), 0 when nothing shells out.
   *   - `prof`: `time`, plus every Spark job of the timed reps: wall time,
   *     gap since the previous job's end, tasks and description.
   *
@@ -88,14 +92,14 @@ object Run {
       def build(): DataFrame =
         extras.get(name).map(_(spark, sfDir)).getOrElse(SparkEntry.queries(name)(spark, sfDir))
       // Bench's loop: an untimed warm-up run, then the timed reps, with
-      // the codegen compiles of the timed reps
-      def timed(): (Seq[Double], DataFrame, Compiles) = {
+      // the codegen compiles and the child processes of the timed reps
+      def timed(): (Seq[Double], DataFrame, Compiles, Int) = {
         Bench.materialize(SparkEntry.queries(name)(spark, sfDir))
         spark.sparkContext.setLocalProperty(queryKey, name)
         val before = Compiles.now()
         try {
-          val (times, last) = Bench.timedRuns(spark, sfDir, name)
-          (times, last, Compiles.now() - before)
+          val ((times, last), forks) = Forks.during(Bench.timedRuns(spark, sfDir, name))
+          (times, last, Compiles.now() - before, forks.size)
         } finally spark.sparkContext.setLocalProperty(queryKey, null)
       }
       try cmd match {
@@ -112,9 +116,9 @@ object Run {
           print(s"##### $name ${Bench.planHash(plan)}\n$plan")
         case "show" => build().show(500, truncate = false)
         case _ =>
-          val (times, _, cg) = timed()
+          val (times, _, cg, forks) = timed()
           println(f"[time] $name%-30s best ${times.min}%.4f  all ${times.map(t => f"$t%.3f").mkString(",")}" +
-            f"  compiles ${cg.classes}%d ${cg.millis}%.1f ms")
+            f"  compiles ${cg.classes}%d ${cg.millis}%.1f ms  forks $forks%d")
           jobs.foreach(_.report(name))
       } catch { case e: Throwable =>
         System.err.println(s"[run] $name failed: ${Bench.describe(e)}")
@@ -132,6 +136,28 @@ object Run {
   private object Compiles {
     def now(): Compiles =
       Compiles(CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime / 1e6)
+  }
+
+  /** Child processes the JVM starts while `body` runs, by command line:
+    * the `jdk.ProcessStart` events of a JFR recording around it.
+    */
+  private[graft] object Forks {
+    def during[T](body: => T): (T, Seq[String]) = {
+      val rec = new Recording()
+      try {
+        rec.enable("jdk.ProcessStart")
+        rec.start()
+        val out = body
+        rec.stop()
+        val file = Files.createTempFile("graft-forks", ".jfr")
+        try {
+          rec.dump(file)
+          (out, RecordingFile.readAllEvents(file).asScala.toSeq
+            .filter(_.getEventType.getName == "jdk.ProcessStart")
+            .map(_.getString("command")))
+        } finally Files.deleteIfExists(file)
+      } finally rec.close()
+    }
   }
 
   private final case class Job(id: Int, query: String, start: Long, end: Long,

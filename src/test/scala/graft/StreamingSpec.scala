@@ -3596,11 +3596,12 @@ class StreamingSpec extends SparkSpec {
         nBuckets = 8, batchId = 2L)
     }
     // the Spark-job count of an eager merge into a stats-contracted
-    // table: touched-bucket probe (map + result), current-file schema
-    // inference, the single exchange's map stage, the write, and the
-    // zone-map aggregate (map + result) — no merge-aggregate stage of
-    // its own, no re-shuffle, no inference job on the read-back
-    assert(jobs.size === 7, s"eager merge launched jobs ${jobs.mkString(",")}")
+    // table: touched-bucket probe (one job over the raw batch),
+    // current-file schema inference, the single exchange's map stage,
+    // the write, and the zone-map aggregate (map + result) — no
+    // merge-aggregate stage of its own, no re-shuffle, no inference job
+    // on the read-back
+    assert(jobs.size === 6, s"eager merge launched jobs ${jobs.mkString(",")}")
     assert(writePlans.size === 1, "exactly one data write per merge")
     val helper = new AdaptiveSparkPlanHelper {}
     val exchanges = helper.collect(writePlans.head) { case e: ShuffleExchangeExec => e }

@@ -7,6 +7,8 @@ For each query result parquet under <verifyOutDir>/<name>/ and its SQL in
 <verifyOutDir>/oracle_sql.json: run the SQL in DuckDB over the sfDir tables,
 sort columns by name, sort rows, compare cell-by-cell. Exact match -> OK;
 float-only tiny diffs -> FLOAT-CLOSE (treated as failure-risk); else FAIL.
+A query Verify recorded as failed in <verifyOutDir>/_errors.json is a FAIL
+that prints the recorded error, whether or not a result dir exists.
 """
 import sys, json, glob, os, math
 import duckdb
@@ -28,10 +30,15 @@ def main(sf_dir, out_dir):
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    names = sorted(d for d in os.listdir(out_dir)
-                   if os.path.isdir(os.path.join(out_dir, d)))
+    errors_path = f"{out_dir}/_errors.json"
+    errors = json.load(open(errors_path)) if os.path.exists(errors_path) else {}
+    names = sorted(set(errors) | {d for d in os.listdir(out_dir)
+                                  if os.path.isdir(os.path.join(out_dir, d))})
     n_ok = n_close = n_fail = n_noracle = 0
     for name in names:
+        # a recorded failure outranks a result dir an earlier run left
+        if name in errors:
+            print(f"[FAIL] {name}: failed: {errors[name]}"); n_fail += 1; continue
         files = glob.glob(f"{out_dir}/{name}/*.parquet")
         if not files:
             print(f"[FAIL] {name}: no result parquet"); n_fail += 1; continue
