@@ -63,6 +63,13 @@ object Bench {
     *     still hashes; counts don't. Partitionings whose toString has no
     *     expression list (RoundRobinPartitioning(32)) need their own rule;
     *   - DPP conjunct order (see [[normalizeDppLine]]).
+    * Not handled here: a sum of 3+ terms canonicalizes to a
+    * `MultiCommutativeOp`, whose operands are ordered by a hashCode that
+    * includes a Class's identity hash, so a join or filter condition
+    * holding one prints its conjuncts in a different order per JVM (q137's
+    * hash changed run to run until its `n_agree` became a chain of
+    * subtractions). A query whose hash differs across runs of one commit
+    * is worth checking for such a sum first.
     * The line split eats the trailing newline; it is restored so hashes
     * of untouched plans stay comparable with earlier runs.
     */
@@ -167,6 +174,9 @@ object Bench {
   private[graft] def jsonObject(entries: Seq[(String, String)]): String =
     entries.map { case (k, v) => s"${jsonString(k)}:${jsonString(v)}" }.mkString("{", ",", "}")
 
+  /** How many failed query names the compact summary line carries. */
+  private val summaryFailedNames = 5
+
   private final case class Result(seconds: Double, hash: String, plan: String, tasks: Long,
                                   error: Option[String] = None)
 
@@ -218,7 +228,8 @@ object Bench {
     val setup = s""""cpus":$cpus,"parallelism":${spark.sparkContext.defaultParallelism}"""
     // each failed query's `describe` line: the failure is in the artifact,
     // not only in a stderr line that can land inside a log4j stack trace
-    val errors = s""""errors":${jsonObject(results.flatMap { case (k, r) => r.error.map(k -> _) })}"""
+    val failed = results.flatMap { case (k, r) => r.error.map(k -> _) }
+    val errors = s""""errors":${jsonObject(failed)}"""
     val json = s"""{$head,$setup,"queries":${obj(r => r4(r.seconds))},""" +
       s""""plans":${obj(r => "\"" + r.hash + "\"")},"tasks":${obj(_.tasks.toString)},$errors,"sf":"$sfDir"}"""
     // stdout FIRST: the artifact writes below can fail on a read-only
@@ -244,9 +255,13 @@ object Bench {
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
     // compact summary as the LAST stdout line: the driver's log capture
     // keeps a bounded tail, and the full per-query JSON above is ~10 KB —
-    // long enough that BENCH_r07.json recorded "parsed": null
+    // long enough that BENCH_r07.json recorded "parsed": null. Failures
+    // are counted and at most `summaryFailedNames` named, so the line stays
+    // bounded when most queries fail (a wrong SF dir); the messages are in
+    // the full line and BENCH_LATEST/HISTORY
     val n = results.count(_._2.seconds > 0)
-    println(s"""{$head,"n":$n,$setup,$errors,"sf":"$sfDir"}""")
+    val failedNames = failed.take(summaryFailedNames).map(f => jsonString(f._1)).mkString("[", ",", "]")
+    println(s"""{$head,"n":$n,$setup,"n_failed":${failed.size},"failed":$failedNames,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -456,22 +456,21 @@ object EventStreams {
         graft.operators.Load.upsertLatest(
           alignTo(legacy, compacted, versionCol), compacted, keyCols, versionCol)
       }
-    // bounded collect: at most nBuckets small ints. Without a legacy
-    // fold, the buckets of the raw batch are those of `compacted`
-    // (upsertLatest keeps every key group), so one job over the batch
-    // collects a per-partition set — no distinct shuffle, no rerun of
-    // the compaction's shuffle
-    val batchTouched =
-      if (legacyFiles.nonEmpty)
-        toMerge.select(upsertBucketCol).distinct().collect().map(_.getInt(0))
-      else
-        batch.select(bucketOf).queryExecution.toRdd
-          .mapPartitions { rows =>
-            val seen = scala.collection.mutable.BitSet.empty
-            rows.foreach(r => seen += r.getInt(0))
-            Iterator.single(seen.toArray)
-          }
-          .collect().flatten
+    // bounded collect: at most nBuckets small ints, one job collecting a
+    // per-partition set (no distinct shuffle). Without a legacy fold the
+    // raw batch's buckets are those of `compacted` (upsertLatest keeps
+    // every key group), so the compaction's shuffle is not rerun; a
+    // legacy fold also touches the flat table's buckets
+    val bucketSource =
+      if (legacyFiles.isEmpty) batch.select(bucketOf)
+      else toMerge.select(upsertBucketCol)
+    val batchTouched = bucketSource.queryExecution.toRdd
+      .mapPartitions { rows =>
+        val seen = scala.collection.mutable.BitSet.empty
+        rows.foreach(r => seen += r.getInt(0))
+        Iterator.single(seen.toArray)
+      }
+      .collect().flatten
     val touched =
       (if (homogenize) batchTouched ++ live.keys else batchTouched)
         .distinct.sorted
