@@ -414,9 +414,15 @@ object Similarity {
     require(sub * m == dim, s"dim $dim must divide into $m subspaces")
     Array.tabulate(m) { j =>
       val sv = vecs.select(array_to_vector(slice(col("v"), j * sub + 1, sub)).as("fv"))
-      new KMeans().setK(codebookSize).setSeed(42L + j).setMaxIter(maxIter)
+      val centers = new KMeans().setK(codebookSize).setSeed(42L + j).setMaxIter(maxIter)
         .setInitMode("random").setFeaturesCol("fv")
         .fit(sv).clusterCenters.map(_.toArray)
+      // KMeans returns fewer than k centers when the points hold fewer
+      // than k distinct values (an IVF cell of one vector leaves an
+      // all-zero residual, so small training sets repeat them): repeat
+      // the last center up to codebookSize. The encoder takes the FIRST
+      // nearest code, so no vector ever encodes to a repeat.
+      centers ++ Array.fill(codebookSize - centers.length)(centers.last)
     }
   }
 

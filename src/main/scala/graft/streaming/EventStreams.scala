@@ -311,9 +311,9 @@ object EventStreams {
     * land in exactly one task, so the bucket-partitioned write still
     * produces EXACTLY ONE data file per touched bucket (the write opens
     * one file per partition value per task).
-    * The zone-map read-back reuses the schema just written, so it
-    * launches no schema-inference job, and each fresh file's byte
-    * length comes from the listing of its `gen_<id>/__bucket=<b>/` dir.
+    * The write tasks compute each fresh file's zone maps and byte
+    * length as they write it ([[writeGeneration]]), so no job reads the
+    * fresh files back and no generation dir is listed.
     * Delta merges, first commits and the legacy-flat migration keep
     * their plans (compact the batch, `repartition(touched)`, write).
     *
@@ -478,9 +478,9 @@ object EventStreams {
     // or a homogenizing heal must still rewrite, so those merges run
     // eager even on a delta-opted sink (rare, one-shot by construction)
     val effectiveDelta = delta && legacyFiles.isEmpty && !homogenize
-    // (new live set, fresh file -> byte length, the schema they were written with)
-    val (newLive, fresh, written) =
-      if (touched.isEmpty) (live, Map.empty[String, Long], None) // empty batch: manifest advances the watermark only
+    // (new live set, the fresh files' stats)
+    val (newLive, freshStats) =
+      if (touched.isEmpty) (live, Map.empty: FileStats) // empty batch: manifest advances the watermark only
       else {
         // current state of ONLY the touched buckets, by explicit file
         // list from the manifest (never a directory listing); leaf-file
@@ -529,44 +529,19 @@ object EventStreams {
                 math.min(touched.length, spark.sparkContext.defaultParallelism))
             }
           }
-        val genName = s"gen_$batchId"
-        val genDir = new Path(table, genName)
         markInFlight(fs, table, batchId)
-        out.write.mode("overwrite").partitionBy(upsertBucketCol).parquet(genDir.toString)
-        val rewritten = touched.flatMap { b =>
-          val d = new Path(genDir, s"$upsertBucketCol=$b")
-          if (!fs.exists(d)) None
-          else {
-            val fls = fs.listStatus(d)
-              .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-              .map(f => s"$genName/$upsertBucketCol=$b/${f.getPath.getName}" -> f.getLen).toSeq
-            if (fls.isEmpty) None else Some(b -> fls)
-          }
-        }.toMap
-        val rewrittenRels = rewritten.map { case (b, fls) => b -> fls.map(_._1) }
+        val (rewritten, stats) = writeGeneration(out, table, batchId,
+          effStatsCols, effBloomCols)
         val outLive =
           if (effectiveDelta)
             // APPEND on the touched buckets' lists — the bucket's prior
             // files stay live and the new ones stack on top (commit order
             // recovered from the gen_<id> path segment at read)
-            live ++ rewrittenRels.map { case (b, fls) =>
+            live ++ rewritten.map { case (b, fls) =>
               b -> (live.getOrElse(b, Seq.empty) ++ fls) }
-          else (live -- touched) ++ rewrittenRels
-        (outLive, rewritten.values.flatten.toMap,
-          Some(StructType(out.schema.filterNot(_.name == upsertBucketCol))))
+          else (live -- touched) ++ rewritten
+        (outLive, stats)
       }
-    // zone maps for this commit's new files (one aggregate over exactly
-    // those files, read under the schema they were just written with —
-    // no inference job; carried files keep their shard-recorded stats),
-    // plus each fresh file's byte length from the listing above
-    val zoneMaps: FileStats =
-      if (effStatsCols.isEmpty && effBloomCols.isEmpty) Map.empty
-      else computeFileStats(spark, table, fresh.keys.toSeq, effStatsCols,
-        effBloomCols, written)
-    val freshStats: FileStats = fresh.map { case (rel, len) =>
-      rel -> (zoneMaps.getOrElse(rel, Map.empty) +
-        (statsBytesKey -> ((Some(len.toString), Some(len.toString)))))
-    }
     // a homogenizing merge rewrote EVERY live bucket under the batch's
     // schema — no narrow file can remain (even if this batch widened
     // again), so the flag drops in this same commit
@@ -698,6 +673,10 @@ object EventStreams {
     }
     val mixed = head.exists(_.mixed)
     val prevReconcile = head.flatMap(_.reconcile)
+    // zone maps: a delete inherits the table's stats contract (it must
+    // not silently drop the pruning the table opted into)
+    val delStatsCols = head.flatMap(_.statsCols).getOrElse(Seq.empty)
+    val delBloomCols = head.flatMap(_.bloomCols).getOrElse(Seq.empty)
     // barrier: the key frame feeds the touched-bucket collect AND the
     // anti-join (two consumers, the curateShard rule)
     val delKeys = keys.select(keyCols.map(col): _*).distinct()
@@ -706,8 +685,8 @@ object EventStreams {
     // bounded collect: at most nBuckets small ints
     val touched = delKeys.select(upsertBucketCol).distinct()
       .collect().map(_.getInt(0)).sorted.filter(live.contains)
-    val (newLive, delFresh) =
-      if (touched.isEmpty) (live, Seq.empty[String])
+    val (newLive, delStats) =
+      if (touched.isEmpty) (live, Map.empty: FileStats)
       else {
         val raw = readFilesTranslated(spark, table, head.flatMap(_.colIds),
           touched.toSeq.flatMap(live.get).flatten, mergeSchema = mixed)
@@ -718,22 +697,10 @@ object EventStreams {
             reconcileRows(raw, ks, v) }.getOrElse(raw)
           .withColumn(upsertBucketCol, pmod(hash(keyCols.map(col): _*), lit(nBuckets)))
           .join(delKeys.select(keyCols.map(col): _*), keyCols, "left_anti")
-        val genName = s"gen_$batchId"
-        val genDir = new Path(table, genName)
         markInFlight(fs, table, batchId)
-        remaining
-          .repartition(touched.length, col(upsertBucketCol))
-          .write.mode("overwrite").partitionBy(upsertBucketCol).parquet(genDir.toString)
-        val rewritten = touched.flatMap { b =>
-          val d = new Path(genDir, s"$upsertBucketCol=$b")
-          if (!fs.exists(d)) None
-          else {
-            val fls = fs.listStatus(d)
-              .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-              .map(f => s"$genName/$upsertBucketCol=$b/${f.getPath.getName}").toSeq
-            if (fls.isEmpty) None else Some(b -> fls)
-          }
-        }.toMap
+        val (rewritten, stats) = writeGeneration(
+          remaining.repartition(touched.length, col(upsertBucketCol)),
+          table, batchId, delStatsCols, delBloomCols)
         val out = if ((live -- touched).isEmpty && rewritten.isEmpty) {
           // the delete emptied the whole table: partitionBy writes no
           // file for an empty bucket, and a fileless manifest would
@@ -741,7 +708,8 @@ object EventStreams {
           // empty (schema-carrying) file instead, so the table reads
           // back as zero rows and later merges work normally
           val b = touched.head
-          val d = new Path(genDir, s"$upsertBucketCol=$b")
+          val genName = s"gen_$batchId"
+          val d = new Path(new Path(table, genName), s"$upsertBucketCol=$b")
           remaining.drop(upsertBucketCol).limit(0).coalesce(1)
             .write.mode("overwrite").parquet(d.toString)
           val fls = fs.listStatus(d)
@@ -749,16 +717,8 @@ object EventStreams {
             .map(f => s"$genName/$upsertBucketCol=$b/${f.getPath.getName}").toSeq
           Map(b -> fls)
         } else (live -- touched) ++ rewritten
-        (out, rewritten.values.flatten.toSeq)
+        (out, stats)
       }
-    // zone maps: a delete inherits the table's stats contract (it must
-    // not silently drop the pruning the table opted into)
-    val delStatsCols = head.flatMap(_.statsCols).getOrElse(Seq.empty)
-    val delBloomCols = head.flatMap(_.bloomCols).getOrElse(Seq.empty)
-    val delStats: FileStats =
-      if (delStatsCols.isEmpty && delBloomCols.isEmpty) Map.empty
-      else computeFileStats(spark, table, delFresh, delStatsCols,
-        delBloomCols)
     // commit hook (the mergeBatchIntoTable seam — see there)
     beforeCommit()
     // untouched buckets may still hold unfolded deltas — carry the spec
@@ -947,10 +907,7 @@ object EventStreams {
     val allFiles = live.values.flatten.toSeq
     val zero = DeleteWhereReport(batchId, 0, 0, allFiles.size, 0)
     def commit(newLive: Map[Int, Seq[String]], touched: Seq[Int],
-               fresh: Seq[String]): Unit = {
-      val freshStats: FileStats =
-        if (delStatsCols.isEmpty && delBloomCols.isEmpty) Map.empty
-        else computeFileStats(spark, table, fresh, delStatsCols, delBloomCols)
+               freshStats: FileStats): Unit = {
       publishManifest(fs, table, batchId, nBuckets, newLive, mixed,
         touched = Some(touched), reconcile = prevReconcile,
         keyedBy = Some(keyCols), fileStats = freshStats,
@@ -967,7 +924,7 @@ object EventStreams {
         colIds = manifestAt(fs, manifest).colIds)
       sweepUnreferenced(fs, table, retainedFiles(fs, table, retain))
     }
-    if (allFiles.isEmpty) { commit(live, Seq.empty, Seq.empty); return Some(zero) }
+    if (allFiles.isEmpty) { commit(live, Seq.empty, Map.empty); return Some(zero) }
     // LOGICAL schema (era-translated): bounds name current columns
     val schema = readFilesTranslated(spark, table,
       manifestAt(fs, manifest).colIds, Seq(allFiles.head),
@@ -1018,7 +975,7 @@ object EventStreams {
     val touched = live.keySet.filter(b =>
       carried.get(b).map(_.toSet) != live.get(b).map(_.toSet)).toSeq.sorted
     if (touched.isEmpty) { // nothing overlaps: a pure watermark advance
-      commit(live, Seq.empty, Seq.empty)
+      commit(live, Seq.empty, Map.empty)
       return Some(zero.copy(bucketsTouched = 0))
     }
     val keep = { // rows where the predicate is NOT true (NULL survives)
@@ -1042,28 +999,15 @@ object EventStreams {
       if (deltaRewrite.isEmpty) None
       else Some(prevReconcile.map { case (ks, v) =>
         reconcileRows(scan(deltaRewrite), ks, v) }.get.filter(keep))).flatten
-    val rewritten: Map[Int, Seq[String]] =
-      if (survivorParts.isEmpty) Map.empty
+    val (rewritten, freshStats) =
+      if (survivorParts.isEmpty) (Map.empty[Int, Seq[String]], Map.empty: FileStats)
       else {
-        val genName = s"gen_$batchId"
-        val genDir = new Path(table, genName)
         markInFlight(fs, table, batchId)
         val survivors = survivorParts
           .reduce(_.unionByName(_, allowMissingColumns = true))
           .withColumn(upsertBucketCol, pmod(hash(keyCols.map(col): _*), lit(nBuckets)))
-        survivors.repartition(touched.length, col(upsertBucketCol))
-          .write.mode("overwrite").partitionBy(upsertBucketCol)
-          .parquet(genDir.toString)
-        touched.flatMap { b =>
-          val d = new Path(genDir, s"$upsertBucketCol=$b")
-          if (!fs.exists(d)) None
-          else {
-            val fls = fs.listStatus(d)
-              .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-              .map(f => s"$genName/$upsertBucketCol=$b/${f.getPath.getName}").toSeq
-            if (fls.isEmpty) None else Some(b -> fls)
-          }
-        }.toMap
+        writeGeneration(survivors.repartition(touched.length, col(upsertBucketCol)),
+          table, batchId, delStatsCols, delBloomCols)
       }
     val merged = (live.keySet ++ rewritten.keySet).flatMap { b =>
       val fls = carried.getOrElse(b, Seq.empty) ++ rewritten.getOrElse(b, Seq.empty)
@@ -1084,8 +1028,7 @@ object EventStreams {
         .map(f => s"$genName/$upsertBucketCol=$b/${f.getPath.getName}").toSeq
       Map(b -> fls)
     } else merged
-    val fresh = newLive.values.flatten.toSeq.filterNot(allFiles.toSet)
-    commit(newLive, touched, fresh)
+    commit(newLive, touched, freshStats)
     Some(DeleteWhereReport(batchId, drops.size,
       plainRewrite.size + deltaRewrite.size,
       allFiles.size - drops.size - plainRewrite.size - deltaRewrite.size,
@@ -1667,19 +1610,18 @@ object EventStreams {
   /** The min/max aggregate for a stats column in its canonical string
     * form — ORDER-PRESERVING per type: the aggregate runs on the native
     * type (a string min over numerics would rank "10" < "9") and only
-    * the RESULT serializes. Timestamps render fixed-width micros so the
-    * string order matches the instant order ([[canonicalBound]] aligns
-    * the probe side); unsupported types (arrays, structs, binary) fail
-    * loudly at write time rather than producing unsound maps.
+    * the RESULT serializes, in the rendering the writer records
+    * ([[graft.io.GenerationWriter.statExpr]]: timestamps as fixed-width
+    * micros so the string order matches the instant order —
+    * [[canonicalBound]] aligns the probe side). Unsupported types
+    * (arrays, structs, binary) fail loudly rather than producing
+    * unsound maps.
     */
   private def statValue(agg: org.apache.spark.sql.Column,
-                        dt: DataType, colName: String): org.apache.spark.sql.Column = dt match {
-    case TimestampType => date_format(agg, "yyyy-MM-dd HH:mm:ss.SSSSSS")
-    case _: NumericType | StringType | DateType | BooleanType =>
-      agg.cast("string")
-    case other => throw new IllegalArgumentException(
-      s"zone maps support numeric/string/date/timestamp/boolean stats " +
-        s"columns; '$colName' is $other")
+                        dt: DataType, colName: String): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.graft.ColumnBridge
+    ColumnBridge.column(graft.io.GenerationWriter.statExpr(
+      ColumnBridge.expression(agg), dt, colName, None))
   }
 
   /** Compare two canonical stat strings under the column's type:
@@ -1749,84 +1691,38 @@ object EventStreams {
     case _ => v
   }
 
-  /** Compute per-file (min, max) for `cols` over freshly written data
-    * files — ONE distributed aggregate over exactly the commit's new
-    * files (O(batch) for a delta merge, O(touched buckets) eager), with
-    * map-side partials; the collect is one row per new file, bounded by
-    * the commit's file count. Columns a file's schema lacks (pre-
-    * widening) get no entry — readers treat missing stats as
-    * unprunable, the conservative direction. `schema`, when the caller
-    * just wrote the files from one frame, is that frame's data schema:
-    * the read then launches no schema-inference job.
+  /** Writes `df` (tagged with [[upsertBucketCol]]) as the generation
+    * `gen_<batchId>` of `table` through [[graft.io.GenerationWriter]]:
+    * bucket -> its fresh files, and their manifest stats. Every fresh
+    * file records its byte length; zone maps (min/max, null counts, row
+    * count, blooms) come with a stats or bloom contract, for the
+    * contracted columns the frame has, computed by the write tasks — no
+    * file is read back. Columns a frame lacks (pre-widening) get no
+    * entry — readers treat missing stats as unprunable, the conservative
+    * direction. `maxRecordsPerFile > 0` splits a bucket's files.
     */
-  private def computeFileStats(spark: SparkSession,
-                               table: org.apache.hadoop.fs.Path,
-                               rels: Seq[String],
-                               cols: Seq[String],
-                               bloomCols: Seq[String] = Nil,
-                               schema: Option[StructType] = None): FileStats = {
-    if (rels.isEmpty || (cols.isEmpty && bloomCols.isEmpty)) return Map.empty
-    val reader = schema.fold(spark.read)(spark.read.schema(_))
-    val df = reader.parquet(rels.map(rel =>
-      new org.apache.hadoop.fs.Path(table, rel).toString): _*)
-    val present = cols.filter(df.columns.contains)
-    val bPresent = bloomCols.filter(df.columns.contains)
-    if (present.isEmpty && bPresent.isEmpty) return Map.empty
-    val rangeAggs = present.flatMap { c =>
-      val dt = df.schema(c).dataType
-      Seq(statValue(min(col(c)), dt, c).as(s"__mn_$c"),
-        statValue(max(col(c)), dt, c).as(s"__mx_$c"))
-    }
-    // per-column NULL counts ride the same aggregate: full-file
-    // coverage proofs ([[deleteUpsertTableWhere]]) need "no row in
-    // this file can escape the predicate via a NULL" — min/max alone
-    // cannot distinguish a some-nulls file from a none-nulls one
-    val nullAggs = present.map(c =>
-      count(when(col(c).isNull, 1)).cast("string").as(s"__nl_$c"))
-    // blooms ride the SAME per-file aggregate: two xxhash64 probe
-    // positions per value, folded to at most 2 x bloomBits distinct
-    // ints per file (collect_set is the map-side-combining form)
-    val bloomAggs = bPresent.flatMap(c => Seq(
-      collect_set(pmod(xxhash64(col(c)), lit(bloomBits)).cast("int"))
-        .as(s"__b1_$c"),
-      collect_set(pmod(xxhash64(col(c), lit(1L)), lit(bloomBits)).cast("int"))
-        .as(s"__b2_$c")))
-    val aggs = rangeAggs ++
-      Seq(count(lit(1)).cast("string").as(statsRowsKey)) ++
-      nullAggs ++ bloomAggs
-    val rows = df.groupBy(input_file_name().as("__f"))
-      .agg(aggs.head, aggs.tail: _*).collect()
-    val nullBase = 2 + 2 * present.size // first null-count field index
-    val bloomBase = nullBase + present.size // first bloom field index
-    rows.flatMap { r =>
-      val f = r.getString(0)
-      rels.find(rel => f.endsWith("/" + rel)).map { rel =>
-        val blooms = bPresent.zipWithIndex.map { case (c, i) =>
-          val bits = new Array[Byte](bloomBits / 8)
-          (r.getSeq[Int](bloomBase + 2 * i) ++
-            r.getSeq[Int](bloomBase + 2 * i + 1)).foreach { p =>
-            bits(p >> 3) = (bits(p >> 3) | (1 << (p & 7))).toByte
-          }
-          bloomKey(c) ->
-            ((Some(java.util.Base64.getEncoder.encodeToString(bits)): Option[String]),
-              (None: Option[String]))
-        }
-        rel -> (present.zipWithIndex.map { case (c, i) =>
-          c -> (Option(r.getString(1 + 2 * i)), Option(r.getString(2 + 2 * i)))
-        }.toMap
-          // per-file ROW COUNT as a reserved pseudo-column (lo = hi =
-          // count): rides the same shard serialization, pointer-reuse
-          // carry, and backup re-key as the real columns — what the
-          // metadata-only aggregates read
-          + (statsRowsKey -> {
-            val n = Option(r.getString(1 + 2 * present.size))
-            (n, n)
-          }) ++ present.zipWithIndex.map { case (c, i) =>
-            val n = Option(r.getString(nullBase + i))
-            nullKey(c) -> ((n, n))
-          } ++ blooms)
-      }
+  private def writeGeneration(df: DataFrame, table: org.apache.hadoop.fs.Path,
+                              batchId: Long, statsCols: Seq[String],
+                              bloomCols: Seq[String],
+                              maxRecordsPerFile: Long = 0): (Map[Int, Seq[String]], FileStats) = {
+    val written = graft.io.GenerationWriter.write(df, table, s"gen_$batchId",
+      upsertBucketCol, statsCols, bloomCols, bloomBits,
+      if (maxRecordsPerFile > 0) Map("maxRecordsPerFile" -> maxRecordsPerFile.toString)
+      else Map.empty)
+    val stats: FileStats = written.values.flatten.map { f =>
+      val len = Some(f.bytes.toString)
+      val n = Some(f.rows.toString)
+      val zoneMap: Map[String, (Option[String], Option[String])] =
+        if (f.rows == 0 || (f.columns.isEmpty && f.blooms.isEmpty)) Map.empty
+        else f.columns.flatMap { case (c, s) =>
+          val nulls = Some(s.nulls.toString)
+          Seq(c -> ((s.min, s.max)), nullKey(c) -> ((nulls, nulls)))
+        } ++ f.blooms.map { case (c, bits) =>
+          bloomKey(c) -> ((Some(java.util.Base64.getEncoder.encodeToString(bits)), None))
+        } + (statsRowsKey -> ((n, n)))
+      f.rel -> (zoneMap + (statsBytesKey -> ((len, len))))
     }.toMap
+    (written.map { case (b, fs) => b -> fs.map(_.rel) }, stats)
   }
 
   /** Reserved stats pseudo-column holding each file's row count
@@ -3055,8 +2951,6 @@ object EventStreams {
     val current = head.reconcile
       .map { case (ks, v) => reconcileRows(raw, ks, v) }.getOrElse(raw)
       .withColumn(upsertBucketCol, pmod(hash(keyCols.map(col): _*), lit(nBuckets)))
-    val genName = s"gen_$batchId"
-    val genDir = new Path(table, genName)
     markInFlight(fs, table, batchId)
     require(sortBy.isEmpty || zOrderBy.isEmpty,
       "pass sortBy (lexicographic) OR zOrderBy (multi-dimension), not both")
@@ -3069,26 +2963,10 @@ object EventStreams {
       else if (sortBy.isEmpty) partitioned
       else partitioned.sortWithinPartitions(
         (upsertBucketCol +: sortBy).map(col): _*)
-    val writer = clustered.write.mode("overwrite").partitionBy(upsertBucketCol)
-    (if (maxRecordsPerFile > 0)
-      writer.option("maxRecordsPerFile", maxRecordsPerFile)
-    else writer).parquet(genDir.toString)
-    val rewritten = (0 until nBuckets).flatMap { b =>
-      val d = new Path(genDir, s"$upsertBucketCol=$b")
-      if (!fs.exists(d)) None
-      else {
-        val fls = fs.listStatus(d)
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .map(f => s"$genName/$upsertBucketCol=$b/${f.getPath.getName}").toSeq
-        if (fls.isEmpty) None else Some(b -> fls)
-      }
-    }.toMap
     val effStatsCols = statsCols.getOrElse(head.statsCols.getOrElse(Seq.empty))
     val effBloomCols = bloomCols.getOrElse(head.bloomCols.getOrElse(Seq.empty))
-    val freshStats: FileStats =
-      if (effStatsCols.isEmpty && effBloomCols.isEmpty) Map.empty
-      else computeFileStats(spark, table,
-        rewritten.values.flatten.toSeq, effStatsCols, effBloomCols)
+    val (rewritten, freshStats) = writeGeneration(clustered, table, batchId,
+      effStatsCols, effBloomCols, maxRecordsPerFile)
     // "kind":"fold" marks this commit ROW-PRESERVING (the read-back
     // equality StreamingSpec pins) — the change feed skips it from
     // metadata alone instead of paying a whole-table diff to learn
@@ -3386,8 +3264,6 @@ object EventStreams {
     val current = prevReconcile
       .map { case (ks, v) => reconcileRows(raw, ks, v) }.getOrElse(raw)
       .withColumn(upsertBucketCol, pmod(hash(keyCols.map(col): _*), lit(nBuckets)))
-    val genName = s"gen_$batchId"
-    val genDir = new Path(table, genName)
     markInFlight(fs, table, batchId)
     val partitioned = current
       .repartition(touched.length, col(upsertBucketCol))
@@ -3402,27 +3278,11 @@ object EventStreams {
       else if (sortBy.isEmpty) partitioned
       else partitioned.sortWithinPartitions(
         (upsertBucketCol +: sortBy).map(col): _*)
-    val writer = clustered.write.mode("overwrite").partitionBy(upsertBucketCol)
-    (if (maxRecordsPerFile > 0)
-      writer.option("maxRecordsPerFile", maxRecordsPerFile)
-    else writer).parquet(genDir.toString)
-    val rewritten = touched.flatMap { b =>
-      val d = new Path(genDir, s"$upsertBucketCol=$b")
-      if (!fs.exists(d)) None
-      else {
-        val fls = fs.listStatus(d)
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .map(f => s"$genName/$upsertBucketCol=$b/${f.getPath.getName}").toSeq
-        if (fls.isEmpty) None else Some(b -> fls)
-      }
-    }.toMap
-    val newLive = (live -- touched) ++ rewritten
     val effStatsCols = head.statsCols.getOrElse(Seq.empty)
     val effBloomCols = head.bloomCols.getOrElse(Seq.empty)
-    val freshStats: FileStats =
-      if (effStatsCols.isEmpty && effBloomCols.isEmpty) Map.empty
-      else computeFileStats(spark, table,
-        rewritten.values.flatten.toSeq, effStatsCols, effBloomCols)
+    val (rewritten, freshStats) = writeGeneration(clustered, table, batchId,
+      effStatsCols, effBloomCols, maxRecordsPerFile)
+    val newLive = (live -- touched) ++ rewritten
     // the reconcile spec DROPS when this rewrite leaves no bucket
     // stacking deltas (every live bucket's files share one commit
     // ordinal — the readSnapshotFiles plain-scan test): a re-cluster

@@ -305,7 +305,7 @@ object ZoneMapFileIndex {
         case TimestampType =>
           // the writer's stats render via date_format(..., micros) as
           // WALL CLOCKS in the table's RECORDED stats time zone
-          // (EventStreams.statValue at write; the statsTz manifest
+          // (GenerationWriter.statExpr at write; the statsTz manifest
           // contract) — the probe must render the instant in that same
           // zone or the comparison is between offset wall clocks and
           // can prune files that hold matching rows (silently wrong
@@ -379,8 +379,8 @@ object ZoneMapFileIndex {
   }
 
   /** The two bloom probe positions for a literal — the same XxHash64
-    * pair the writer's per-file aggregate folded
-    * ([[EventStreams.computeFileStats]]).
+    * pair the write tasks fold into each file's bloom
+    * ([[graft.io.GenerationWriter]]).
     */
   private def bloomPositions(l: Literal): (Int, Int) = {
     def pmod(x: Long): Int =

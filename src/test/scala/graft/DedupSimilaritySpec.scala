@@ -1047,4 +1047,33 @@ class DedupSimilaritySpec extends SparkSpec {
     Similarity.compactIvfPqIndex(spark, idx, batchId = 10L)
     assert(ids() === Set(0L, 1L, 2L, 4L, 5L, 6L))
   }
+
+  test("q199 on a generated embeddings table (64-dim unit vectors, 10 labels): every check holds") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // the benchmark generator's embeddings shape and stream (seed 1):
+    // 500 gaussian vectors normalized to unit length, labels in [0, 10)
+    val r = new java.util.Random(1L * 1000003L + 9)
+    val rows = (0 until 500).map { i =>
+      val v = Array.fill(64)(r.nextGaussian())
+      val norm = math.sqrt(v.map(x => x * x).sum)
+      Row(i.toLong, v.map(x => (x / norm).toFloat).toSeq, r.nextInt(10))
+    }
+    val schema = StructType(Seq(StructField("vec_id", LongType),
+      StructField("embedding", ArrayType(FloatType)), StructField("label", IntegerType)))
+    val dir = java.nio.file.Files.createTempDirectory("graft-q199-gen").toString
+    val table = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    table.write.parquet(s"$dir/embeddings.parquet")
+    val checks = SparkEntry.q199IndexFeedSync(spark, dir).collect()
+      .map(r => r.getString(0) -> r.getBoolean(1)).toMap
+    assert(checks.size === 7 && checks.values.forall(identity), s"q199 checks: $checks")
+    // q199's index trains on the first 24 vectors: single-vector cells
+    // leave all-zero residuals, so a subspace fit finds fewer than
+    // codebookSize distinct points — the codebook still holds every code
+    val idx = java.nio.file.Files.createTempDirectory("graft-q199-idx").toString
+    Similarity.buildIvfPqIndex(table.filter(col("vec_id") < 24), idx)
+    val sizes = spark.read.parquet(s"$idx/codebooks").groupBy("subspace").count()
+      .collect().map(_.getLong(1)).toSet
+    assert(sizes === Set(16L))
+  }
 }

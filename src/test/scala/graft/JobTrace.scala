@@ -12,6 +12,8 @@ import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationComm
 import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
 import org.apache.spark.sql.util.QueryExecutionListener
 
+import graft.io.GenerationWriter
+
 /** What a block of code ran on Spark: its jobs, and the CSV file
   * scans in the final plans of the queries it executed (a reused exchange
   * is not scanned again, so it does not count).
@@ -20,37 +22,44 @@ final case class JobTrace(jobs: Int, csvScans: Int)
 
 object JobTrace extends AdaptiveSparkPlanHelper {
 
-  /** The ids of the jobs a block ran, and the executed plans of its
-    * parquet (file-source) writes.
+  /** The ids of the jobs a block ran, the executed plans of its parquet
+    * (file-source and table-generation) writes, and the files its queries'
+    * file-source scans read.
     */
-  final case class Detail(jobIds: Seq[Int], writes: Seq[SparkPlan])
+  final case class Detail(jobIds: Seq[Int], writes: Seq[SparkPlan], scans: Seq[String])
 
   /** Runs `f` under its own job group and counts its jobs and CSV scans. */
   def apply(spark: SparkSession)(f: => Unit): JobTrace = {
     val (jobIds, plans) = run(spark)(f)
-    JobTrace(jobIds.size, plans.map(qe => collect(qe.executedPlan) {
+    JobTrace(jobIds.size, plans.map { case (_, qe) => collect(qe.executedPlan) {
       case s: FileSourceScanExec if s.relation.fileFormat.isInstanceOf[CSVFileFormat] => s
-    }.size).sum)
+    }.size }.sum)
   }
 
-  /** Runs `f` under its own job group and returns its job ids and writes. */
+  /** Runs `f` under its own job group and returns its job ids, writes and
+    * scanned files.
+    */
   def detail(spark: SparkSession)(f: => Unit): Detail = {
     val (jobIds, plans) = run(spark)(f)
     Detail(jobIds, plans.collect {
-      case qe if qe.analyzed.isInstanceOf[InsertIntoHadoopFsRelationCommand] => qe.executedPlan
-    })
+      case (fn, qe) if fn == GenerationWriter.ExecutionName ||
+          qe.analyzed.isInstanceOf[InsertIntoHadoopFsRelationCommand] => qe.executedPlan
+    }, plans.flatMap { case (_, qe) => collect(qe.executedPlan) {
+      case s: FileSourceScanExec => s.relation.location.inputFiles.toSeq
+    }.flatten })
   }
 
-  /** The job ids and query executions of `f`. Listener events arrive
-    * asynchronously, so a marker job under a second group runs last: the
-    * listeners sit on the bus's shared queue, which delivers in order, so
-    * once the marker's start is seen every earlier event is in.
+  /** The job ids of `f`, and its query executions with the names they
+    * report. Listener events arrive asynchronously, so a marker job under
+    * a second group runs last: the listeners sit on the bus's shared
+    * queue, which delivers in order, so once the marker's start is seen
+    * every earlier event is in.
     */
-  private def run(spark: SparkSession)(f: => Unit): (Seq[Int], Seq[QueryExecution]) = {
+  private def run(spark: SparkSession)(f: => Unit): (Seq[Int], Seq[(String, QueryExecution)]) = {
     val group = s"job-trace-${System.nanoTime()}"
     val marker = s"$group-marker"
     val jobs = new ConcurrentLinkedQueue[Int]()
-    val plans = new ConcurrentLinkedQueue[QueryExecution]()
+    val plans = new ConcurrentLinkedQueue[(String, QueryExecution)]()
     @volatile var markerSeen = false
     val jobListener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -61,8 +70,8 @@ object JobTrace extends AdaptiveSparkPlanHelper {
         }
     }
     val qeListener = new QueryExecutionListener {
-      override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe)
-      override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = plans.add(qe)
+      override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit = plans.add(fn -> qe)
+      override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = plans.add(fn -> qe)
     }
     val sc = spark.sparkContext
     sc.addSparkListener(jobListener)

@@ -3591,17 +3591,18 @@ class StreamingSpec extends SparkSpec {
     EventStreams.mergeBatchIntoTable(rows(0 until 400, 0L), t, Seq("k"), "version",
       nBuckets = 8, batchId = 1L, statsCols = Some(Seq("k", "payload")))
     // corrections of existing keys plus new keys, every bucket touched
-    val JobTrace.Detail(jobs, writePlans) = JobTrace.detail(spark) {
+    val JobTrace.Detail(jobs, writePlans, scans) = JobTrace.detail(spark) {
       EventStreams.mergeBatchIntoTable(rows(300 until 500, 1L), t, Seq("k"), "version",
         nBuckets = 8, batchId = 2L)
     }
     // the Spark-job count of an eager merge into a stats-contracted
     // table: touched-bucket probe (one job over the raw batch),
-    // current-file schema inference, the single exchange's map stage,
-    // the write, and the zone-map aggregate (map + result) — no
-    // merge-aggregate stage of its own, no re-shuffle, no inference job
-    // on the read-back
-    assert(jobs.size === 6, s"eager merge launched jobs ${jobs.mkString(",")}")
+    // current-file schema inference, the single exchange's map stage and
+    // the write — no merge-aggregate stage of its own, no re-shuffle, and
+    // no zone-map read-back: the write tasks compute the stats
+    assert(jobs.size === 4, s"eager merge launched jobs ${jobs.mkString(",")}")
+    assert(!scans.exists(_.contains("/gen_2/")),
+      s"no query of the merge may read its own fresh files: ${scans.filter(_.contains("/gen_2/"))}")
     assert(writePlans.size === 1, "exactly one data write per merge")
     val helper = new AdaptiveSparkPlanHelper {}
     val exchanges = helper.collect(writePlans.head) { case e: ShuffleExchangeExec => e }
@@ -3633,6 +3634,32 @@ class StreamingSpec extends SparkSpec {
         "__bytes" -> (Some(f.length.toString), Some(f.length.toString)))
       assert(stats(rel) === want, s"zone maps of $rel")
     }
+    assert(multiset(EventStreams.readUpsertTable(spark, t), Seq("k", "payload", "version")) ===
+      multiset(rows(0 until 300, 0L).unionByName(rows(300 until 500, 1L)),
+        Seq("k", "payload", "version")))
+  }
+
+  test("compaction shape: one write, no read-back of its fresh files, pinned job count") {
+    val t = Files.createTempDirectory("graft-cshape").toString + "/t"
+    def rows(ks: Range, v: Long) = ks.map(k =>
+      (k.toLong, if (k % 7 == 0) null else s"p$k-$v", v)).toDF("k", "payload", "version")
+    EventStreams.mergeBatchIntoTable(rows(0 until 400, 0L), t, Seq("k"), "version",
+      nBuckets = 8, batchId = 1L, statsCols = Some(Seq("k", "payload")))
+    EventStreams.mergeBatchIntoTable(rows(300 until 500, 1L), t, Seq("k"), "version",
+      nBuckets = 8, batchId = 2L)
+    val JobTrace.Detail(jobs, writePlans, scans) = JobTrace.detail(spark) {
+      EventStreams.compactUpsertTable(spark, t, Seq("k"), nBuckets = 8, batchId = 3L,
+        sortBy = Seq("k"), maxRecordsPerFile = 40)
+    }
+    // live-file schema inference, the bucket exchange's map stage and the
+    // write; the zone maps come from the write tasks (the read-back's map
+    // and result jobs are gone)
+    assert(jobs.size === 3, s"compaction launched jobs ${jobs.mkString(",")}")
+    assert(writePlans.size === 1, "exactly one data write per compaction")
+    assert(!scans.exists(_.contains("/gen_3/")),
+      s"no query of the compaction may read its own fresh files: ${scans.filter(_.contains("/gen_3/"))}")
+    val live = EventStreams.tableManifest(spark, t)
+    assert(live.values.flatten.forall(_.startsWith("gen_3/")) && live.values.exists(_.size > 1))
     assert(multiset(EventStreams.readUpsertTable(spark, t), Seq("k", "payload", "version")) ===
       multiset(rows(0 until 300, 0L).unionByName(rows(300 until 500, 1L)),
         Seq("k", "payload", "version")))
