@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
@@ -236,9 +236,8 @@ object Bench {
     // checkout / bad override path, and the JSON line is the one output
     // the driver must always get
     println(json)
-    val histPath = sys.env.getOrElse("SPARK_GRAFT_HISTORY_OUT", "/root/repo/BENCH_HISTORY.jsonl")
-    def writeQuietly(path: String, content: String, opts: StandardOpenOption*): Unit =
-      try Files.writeString(Paths.get(path), content, opts: _*)
+    def writeQuietly(path: String, content: String): Unit =
+      try Files.writeString(Paths.get(path), content)
       catch { case e: Throwable =>
         System.err.println(s"bench: artifact write failed for $path: $e") }
     // full normalized plan STRINGS: the hash tells you THAT a plan
@@ -249,16 +248,12 @@ object Bench {
     writeQuietly(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/BENCH_LATEST.json"),
       json + "\n")
-    // one committed line per run, so cross-run timing/plan-hash diffs
-    // do not depend on git archaeology of BENCH_LATEST.json
-    writeQuietly(histPath, s"""{"ts":${System.currentTimeMillis()},""" + json.stripPrefix("{") + "\n",
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
     // compact summary as the LAST stdout line: the driver's log capture
     // keeps a bounded tail, and the full per-query JSON above is ~10 KB —
     // long enough that BENCH_r07.json recorded "parsed": null. Failures
     // are counted and at most `summaryFailedNames` named, so the line stays
     // bounded when most queries fail (a wrong SF dir); the messages are in
-    // the full line and BENCH_LATEST/HISTORY
+    // the full line and BENCH_LATEST
     val n = results.count(_._2.seconds > 0)
     val failedNames = failed.take(summaryFailedNames).map(f => jsonString(f._1)).mkString("[", ",", "]")
     println(s"""{$head,"n":$n,$setup,"n_failed":${failed.size},"failed":$failedNames,"sf":"$sfDir"}""")

@@ -163,16 +163,16 @@ object GraftSqlWrites {
         "mutate the LATEST one — open the table without asOf to write")
     }
     val dir = cmd.tableDir
+    val nBuckets = EventStreams.tableNBuckets(spark, dir).getOrElse(refuse(
+      s"$dir has no committed manifest to merge into"))
     val keyCols = EventStreams.tableKeyedBy(spark, dir).getOrElse(refuse(
-      s"$dir records no key contract (pre-r14 writer); run one " +
-        "mergeBatchIntoTable so the table adopts it"))
+      s"$dir records no key contract; run one mergeBatchIntoTable so " +
+        "the table records it"))
     val reconcile = EventStreams.tableReconcileSpec(spark, dir)
     val versionCol = reconcile.map(_._2)
       .orElse(EventStreams.tableVersionedBy(spark, dir)).getOrElse(refuse(
-        s"$dir records no version contract (pre-r17 writer); run one " +
-          "mergeBatchIntoTable so the table adopts it"))
-    val nBuckets = EventStreams.tableNBuckets(spark, dir).getOrElse(refuse(
-      s"$dir has no committed manifest to merge into"))
+        s"$dir records no version contract; run one mergeBatchIntoTable " +
+          "so the table records it"))
     // the reconciling snapshot read: translated, delta-resolved — the
     // matched side of the join regardless of table posture
     val targetDF = EventStreams.readUpsertTable(spark, dir)

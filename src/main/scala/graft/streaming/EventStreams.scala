@@ -218,15 +218,15 @@ object EventStreams {
       }
       .start()
 
-  /** Schema adoption, merge side (the legacy-LAYOUT adoption
-    * convention applied to WIDENED schemas — ADVICE r10): align an
-    * on-disk frame to the incoming batch's schema by defaulting
-    * columns the table was committed without — NULL for data columns;
-    * -1 for the version column, so adopted rows always LOSE version
-    * ties to any real batch instead of turning null-versioned
-    * (max_by drops all-null groups, which would null out untouched
-    * legacy keys). Columns the table has but the batch lacks still
-    * fail loudly — narrowing is a writer bug, not a migration.
+  /** Schema adoption, merge side (for WIDENED schemas — ADVICE r10):
+    * align an on-disk frame to the incoming batch's schema by
+    * defaulting columns the table was committed without — NULL for
+    * data columns; -1 for the version column, so adopted rows always
+    * LOSE version ties to any real batch instead of turning
+    * null-versioned (max_by drops all-null groups, which would null
+    * out untouched older keys). Columns the table has but the batch
+    * lacks still fail loudly — narrowing is a writer bug, not a
+    * migration.
     */
   private[graft] def alignTo(onDisk: DataFrame, target: DataFrame,
                              versionCol: String): DataFrame =
@@ -314,18 +314,18 @@ object EventStreams {
     * The write tasks compute each fresh file's zone maps and byte
     * length as they write it ([[writeGeneration]]), so no job reads the
     * fresh files back and no generation dir is listed.
-    * Delta merges, first commits and the legacy-flat migration keep
-    * their plans (compact the batch, `repartition(touched)`, write).
+    * Delta merges and first commits keep the other plan (compact the
+    * batch, `repartition(touched)`, write).
     *
     * Exactly-once across foreachBatch replays: the manifest's batchId is
     * the applied-batch watermark (foreachBatch replays only the last
     * uncommitted batch, so one high-water mark is the whole ledger); a
     * replayed batchId returns before touching data. A crash mid-merge
     * leaves an uncommitted generation dir that the replay overwrites.
-    * Tables from the older layouts migrate transparently: root-level
-    * flat part files are folded into the first manifest commit, and
-    * pre-manifest `__bucket=*` dirs are adopted as the initial live set
-    * (their `_commits/<id>` markers still honored for replay).
+    * The table is its committed manifest: a directory without one is
+    * created by the first commit, and one holding data of an older,
+    * manifest-less layout is refused before anything is written
+    * ([[requireFormatFloor]]).
     */
   def mergeBatchIntoTable(batch: DataFrame, tableDir: String, keyCols: Seq[String],
                           versionCol: String, nBuckets: Int, batchId: Long,
@@ -341,11 +341,10 @@ object EventStreams {
     val spark = batch.sparkSession
     val table = new Path(tableDir)
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // legacy exactly-once marker (tables last written by the dir-swap sink)
-    if (fs.exists(new Path(new Path(table, "_commits"), batchId.toString))) return
     // the head manifest, listed and read ONCE: every contract below
     // parses from this one body
     val head = manifestList(fs, table).lastOption.map(manifestAt(fs, _))
+    if (head.isEmpty) requireFormatFloor(fs, table)
     if (head.exists(_.batchId >= batchId)) return // replayed batch: already merged
     // sticky mixed-schema flag: once a widening merge commits, narrow
     // files may linger in untouched buckets, so readers must merge
@@ -417,54 +416,17 @@ object EventStreams {
     val homogenize = compactEvery > 0 && mixed
     var widenedThisBatch = false
 
-    // live file set: the committed manifest, or (first manifest commit
-    // on an older table) the pre-manifest __bucket=* dirs adopted as-is
-    val live: Map[Int, Seq[String]] = head.map(_.live).getOrElse {
-      if (!fs.exists(table)) Map.empty
-      else fs.listStatus(table)
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$upsertBucketCol="))
-        .flatMap { d =>
-          val b = d.getPath.getName.stripPrefix(s"$upsertBucketCol=").toInt
-          val fls = fs.listStatus(d.getPath)
-            .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-            .map(f => s"${d.getPath.getName}/${f.getPath.getName}").toSeq
-          if (fls.isEmpty) None else Some(b -> fls)
-        }.toMap
-    }
-
+    val live: Map[Int, Seq[String]] = head.map(_.live).getOrElse(Map.empty)
     val bucketOf = pmod(hash(keyCols.map(col): _*), lit(nBuckets))
     // compact the batch to one row per key, tagged with its bucket
     val compacted = graft.operators.Load.upsertLatest(
         batch, batch.limit(0), keyCols, versionCol)
       .withColumn(upsertBucketCol, bucketOf)
-    // migration: a table written by the pre-bucketed (flat) sink layout
-    // has root-level part files — fold the WHOLE flat table into this
-    // merge; the files become unreferenced by the published manifest and
-    // the post-commit sweep retires them
-    val legacyFiles =
-      if (fs.exists(table))
-        fs.listStatus(table).filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      else Array.empty[org.apache.hadoop.fs.FileStatus]
-    val toMerge =
-      if (legacyFiles.isEmpty) compacted
-      else {
-        val legacy = spark.read.option("mergeSchema", "true")
-          .parquet(legacyFiles.map(_.getPath.toString).toIndexedSeq: _*)
-          .withColumn(upsertBucketCol, bucketOf)
-        // folded wholly into this merge, so legacy widening does not
-        // leave narrow files behind: no flag flip needed here
-        graft.operators.Load.upsertLatest(
-          alignTo(legacy, compacted, versionCol), compacted, keyCols, versionCol)
-      }
     // bounded collect: at most nBuckets small ints, one job collecting a
-    // per-partition set (no distinct shuffle). Without a legacy fold the
-    // raw batch's buckets are those of `compacted` (upsertLatest keeps
-    // every key group), so the compaction's shuffle is not rerun; a
-    // legacy fold also touches the flat table's buckets
-    val bucketSource =
-      if (legacyFiles.isEmpty) batch.select(bucketOf)
-      else toMerge.select(upsertBucketCol)
-    val batchTouched = bucketSource.queryExecution.toRdd
+    // per-partition set (no distinct shuffle). The raw batch's buckets
+    // are those of `compacted` (upsertLatest keeps every key group), so
+    // the compaction's shuffle is not rerun
+    val batchTouched = batch.select(bucketOf).queryExecution.toRdd
       .mapPartitions { rows =>
         val seen = scala.collection.mutable.BitSet.empty
         rows.foreach(r => seen += r.getInt(0))
@@ -474,10 +436,10 @@ object EventStreams {
     val touched =
       (if (homogenize) batchTouched ++ live.keys else batchTouched)
         .distinct.sorted
-    // a delta merge APPENDS; but a migration fold (legacy flat files)
-    // or a homogenizing heal must still rewrite, so those merges run
-    // eager even on a delta-opted sink (rare, one-shot by construction)
-    val effectiveDelta = delta && legacyFiles.isEmpty && !homogenize
+    // a delta merge APPENDS; but a homogenizing heal must still
+    // rewrite, so that merge runs eager even on a delta-opted sink
+    // (rare, one-shot by construction)
+    val effectiveDelta = delta && !homogenize
     // (new live set, the fresh files' stats)
     val (newLive, freshStats) =
       if (touched.isEmpty) (live, Map.empty: FileStats) // empty batch: manifest advances the watermark only
@@ -503,31 +465,25 @@ object EventStreams {
             if (probe.exists(f => widens(
                 readFilesTranslated(spark, table, prevColIds, Seq(f),
                   mergeSchema = false),
-                toMerge.drop(upsertBucketCol))))
+                compacted.drop(upsertBucketCol))))
               widenedThisBatch = true
-            toMerge.repartition(touched.length, col(upsertBucketCol)) // one file per bucket per merge
+            compacted.repartition(touched.length, col(upsertBucketCol)) // one file per bucket per merge
           } else {
             val raw = readFilesTranslated(spark, table, prevColIds,
-              currentRels, mergeSchema = mixed || legacyFiles.nonEmpty)
+              currentRels, mergeSchema = mixed)
             // committed delta history resolves BEFORE the eager fold —
             // an unreconciled union would let a superseded version
             // win a (version, ·) tie against its own later commit
             val current = prevReconcile.map { case (ks, v) =>
                 reconcileRows(raw, ks, v) }.getOrElse(raw)
               .withColumn(upsertBucketCol, bucketOf)
-            if (widens(current, toMerge)) widenedThisBatch = true
-            if (legacyFiles.nonEmpty)
-              graft.operators.Load.upsertLatest(
-                  alignTo(current, toMerge, versionCol), toMerge, keyCols, versionCol)
-                .repartition(touched.length, col(upsertBucketCol))
-            else {
-              // the raw batch joins the single exchange: the per-key
-              // aggregate compacts it and merges it in one pass
-              val incoming = batch.withColumn(upsertBucketCol, bucketOf)
-              mergeByBucket(alignTo(current, incoming, versionCol), incoming,
-                keyCols, versionCol,
-                math.min(touched.length, spark.sparkContext.defaultParallelism))
-            }
+            if (widens(current, compacted)) widenedThisBatch = true
+            // the raw batch joins the single exchange: the per-key
+            // aggregate compacts it and merges it in one pass
+            val incoming = batch.withColumn(upsertBucketCol, bucketOf)
+            mergeByBucket(alignTo(current, incoming, versionCol), incoming,
+              keyCols, versionCol,
+              math.min(touched.length, spark.sparkContext.defaultParallelism))
           }
         markInFlight(fs, table, batchId)
         val (rewritten, stats) = writeGeneration(out, table, batchId,
@@ -622,7 +578,9 @@ object EventStreams {
     * pre-delete snapshot's files readable for time travel (the
     * takedown-audit window). An empty key set still advances the
     * applied-batch watermark. A bucket whose rows all die leaves the
-    * manifest (empty buckets carry no files).
+    * manifest (empty buckets carry no files). Like the merge, it
+    * refuses a directory that holds a manifest-less older layout
+    * before anything is written ([[requireFormatFloor]]).
     */
   def deleteFromTable(spark: SparkSession, tableDir: String, keys: DataFrame,
                       keyCols: Seq[String], nBuckets: Int, batchId: Long,
@@ -633,9 +591,9 @@ object EventStreams {
     require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
     val table = new Path(tableDir)
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new Path(new Path(table, "_commits"), batchId.toString))) return
     // the head manifest, listed and read once (as in the merge)
     val head = manifestList(fs, table).lastOption.map(manifestAt(fs, _))
+    if (head.isEmpty) requireFormatFloor(fs, table)
     if (head.exists(_.batchId >= batchId)) return // replayed batch
     // same bucket-count guard as the merge (round 17): an incremental
     // delete under a different count would probe the wrong buckets
@@ -645,32 +603,7 @@ object EventStreams {
           s"$nBuckets — incremental writes cannot re-bucket; " +
           "compactUpsertTable re-buckets the whole table in one commit.")
     }
-    // pre-manifest tables: adopt __bucket=* dirs as the live set (the
-    // mergeBatchIntoTable migration convention). Root-level FLAT legacy
-    // files cannot be adopted without a full rewrite — and publishing a
-    // manifest that omits them would let the post-commit sweep DELETE
-    // them — so they fail fast: run one merge (which folds them into
-    // buckets) before deleting.
-    val live: Map[Int, Seq[String]] = head.map(_.live).getOrElse {
-      if (!fs.exists(table)) Map.empty
-      else {
-        require(!fs.listStatus(table).exists(s =>
-          s.isFile && s.getPath.getName.endsWith(".parquet")),
-          s"$tableDir has a flat pre-manifest layout; run one " +
-            "mergeBatchIntoTable (which migrates it into buckets) before " +
-            "deleteFromTable - deleting from the flat layout would sweep " +
-            "unmigrated data files")
-        fs.listStatus(table)
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$upsertBucketCol="))
-          .flatMap { d =>
-            val b = d.getPath.getName.stripPrefix(s"$upsertBucketCol=").toInt
-            val fls = fs.listStatus(d.getPath)
-              .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-              .map(f => s"${d.getPath.getName}/${f.getPath.getName}").toSeq
-            if (fls.isEmpty) None else Some(b -> fls)
-          }.toMap
-      }
-    }
+    val live: Map[Int, Seq[String]] = head.map(_.live).getOrElse(Map.empty)
     val mixed = head.exists(_.mixed)
     val prevReconcile = head.flatMap(_.reconcile)
     // zone maps: a delete inherits the table's stats contract (it must
@@ -878,8 +811,7 @@ object EventStreams {
     * reuse pointers — O(changed) metadata), inherited stats/bloom
     * contracts with fresh files re-statted, post-commit sweep.
     * Replayed batchIds return None. Requires a committed manifest and
-    * a recorded key contract (rewritten rows re-bucket by key hash;
-    * run one merge on legacy tables first).
+    * a recorded key contract (rewritten rows re-bucket by key hash).
     */
   def deleteUpsertTableWhere(spark: SparkSession, tableDir: String,
                              bounds: Seq[ColBound], batchId: Long,
@@ -891,7 +823,7 @@ object EventStreams {
     val manifest = manifestList(fs, table).lastOption.getOrElse(
       throw new IllegalStateException(
         s"$tableDir has no committed manifest; run one mergeBatchIntoTable " +
-          "(which migrates legacy layouts) before deleteUpsertTableWhere"))
+          "before deleteUpsertTableWhere"))
     val (prevId, live) = readManifest(fs, manifest)
     if (prevId >= batchId) return None // replayed batch
     val nBuckets = manifestAt(fs, manifest).nBuckets
@@ -1038,8 +970,8 @@ object EventStreams {
   /** Read back the logical table the upsert sink maintains: exactly the
     * files the latest committed manifest names (a consistent snapshot —
     * an in-flight merge's staged generation is invisible until its
-    * manifest publishes). Falls back to a plain directory read for
-    * tables from the pre-manifest layouts.
+    * manifest publishes). A table with no committed file fails by name
+    * ([[noSnapshot]]).
     */
   def readUpsertTable(spark: SparkSession, tableDir: String): DataFrame = {
     import org.apache.hadoop.fs.Path
@@ -1052,7 +984,7 @@ object EventStreams {
         // (delta tables) resolves latest-per-key — both through
         // [[readSnapshotFiles]], the one reader funnel
         readSnapshotFiles(spark, table, fs, p, live)
-      case _ => spark.read.parquet(tableDir).drop(upsertBucketCol)
+      case committed => noSnapshot(fs, table, committed.isDefined)
     }
   }
 
@@ -1070,8 +1002,8 @@ object EventStreams {
     * only their files scanned; a delta table's reconcile spec applies
     * to the subset (buckets partition keys, so the restriction is
     * reconcile-closed). The final semi join broadcasts the tiny key
-    * frame. Requires a committed manifest (pre-manifest layouts have
-    * no bucket map to prune by — run one merge first).
+    * frame. Requires a committed manifest (its bucket map is what the
+    * read prunes by).
     */
   def readUpsertTableForKeys(spark: SparkSession, tableDir: String,
                              keys: DataFrame,
@@ -1263,7 +1195,7 @@ object EventStreams {
   }
 
   /** Highest committed batchId of a keyed upsert table — the
-    * applied-batch watermark (None for pre-manifest or absent tables).
+    * applied-batch watermark (None when nothing is committed).
     * The guard multi-commit operations use to decide, on replay,
     * whether a half of their commit pair already landed.
     */
@@ -1271,7 +1203,7 @@ object EventStreams {
     headManifest(spark, tableDir).map(_.batchId)
 
   /** The live (bucket -> data files) map of the latest committed
-    * manifest — empty for pre-manifest tables. Exposed for inspection
+    * manifest — empty when nothing is committed. Exposed for inspection
     * and tests (e.g. asserting a merge left untouched buckets'
     * files byte-identical).
     */
@@ -1288,6 +1220,61 @@ object EventStreams {
 
   private def manifestsDir(table: org.apache.hadoop.fs.Path) =
     new org.apache.hadoop.fs.Path(table, "_manifests")
+
+  /** A table directory holding data in a layout older than the
+    * manifest format; [[requireFormatFloor]] names the layout found.
+    */
+  final class FormatFloorException(val table: String, val layout: String)
+    extends IllegalStateException(s"$table holds $layout and no committed " +
+      "manifest: that layout is below the table format floor, which reads " +
+      "and writes only manifest-committed tables; rebuild the table by " +
+      "merging its rows into a new directory")
+
+  /** A read of a table with no committed snapshot that carries a schema:
+    * nothing is committed, or the head manifest names no file.
+    */
+  final class NoSnapshotException(val table: String, val committedEmpty: Boolean)
+    extends IllegalStateException(
+      if (committedEmpty) s"$table's committed snapshot names no file, so it has no schema to read"
+      else s"$table has no committed manifest to read")
+
+  /** The FORMAT FLOOR, the one check every entry point runs on a table
+    * without a committed manifest (so a normal commit makes no extra
+    * filesystem call). Such a directory may be absent, empty, or hold
+    * the debris of an uncommitted first commit (`gen_<id>/`,
+    * `_inflight/`, `_manifests/`). If it holds data of a manifest-less
+    * older layout, this throws [[FormatFloorException]] naming it
+    * before anything is written: the post-commit sweep deletes every
+    * file no manifest names, so a first commit over such a directory
+    * would delete its data.
+    */
+  private def requireFormatFloor(fs: org.apache.hadoop.fs.FileSystem,
+                                 table: org.apache.hadoop.fs.Path): Unit =
+    if (fs.exists(table)) {
+      val layouts = fs.listStatus(table).toSeq.flatMap { st =>
+        (st.isFile, st.getPath.getName) match {
+          case (true, n) if n.endsWith(".parquet") => Some("flat root-level part files")
+          case (false, n) if n.startsWith(s"$upsertBucketCol=") =>
+            Some(s"manifest-less $upsertBucketCol=* dirs")
+          case (false, n) if n == "_commits" || n.startsWith("_staging_") =>
+            Some("the dir-swap sink's _commits/ markers or _staging_* dirs")
+          case (false, "current" | "_retiring") => Some("the sketch sink's current/ dir")
+          case _ => None
+        }
+      }.distinct
+      if (layouts.nonEmpty) throw new FormatFloorException(table.toString, layouts.mkString(" and "))
+    }
+
+  /** A read of a table that has no committed file to read: an older
+    * layout fails the format floor; otherwise the table has no
+    * committed manifest, or its head names no file (an empty first
+    * batch) and so carries no schema — [[NoSnapshotException]].
+    */
+  private def noSnapshot(fs: org.apache.hadoop.fs.FileSystem,
+                         table: org.apache.hadoop.fs.Path, committed: Boolean): Nothing = {
+    if (!committed) requireFormatFloor(fs, table)
+    throw new NoSnapshotException(table.toString, committed)
+  }
 
   /** Committed manifest files, oldest → newest (zero-padded names sort
     * by batchId).
@@ -1373,9 +1360,10 @@ object EventStreams {
     *     per commit instead of re-serializing every live file of every
     *     bucket (the pre-r13 design's one super-linear term at 100 TB).
     *     Shard files are IMMUTABLE and shared across lists.
-    *   - LEGACY inline (`"buckets":{...}` with the file arrays in the
-    *     list body): adopted transparently on read; the first new
-    *     commit writes the sharded shape (all buckets, once).
+    *   - INLINE, the backup shape (`"buckets":{...}` with the file
+    *     arrays in the list body, [[inlineManifestBody]]): what a backup
+    *     commits and a restore reads; the first commit after an inline
+    *     head writes the sharded shape (all buckets, once).
     *
     * The JSON is this sink's own writer format (no escapes needed —
     * paths are `gen_<id>/__bucket=<b>/part-*.parquet`), parsed with
@@ -1476,7 +1464,7 @@ object EventStreams {
     }
     /** A sharded list's (bucket -> shard file name) pointer map, parsed
       * WITHOUT touching the shard files — what pointer reuse and shard
-      * GC cost. None for legacy inline lists.
+      * GC cost. None for inline (backup-shape) lists.
       */
     lazy val shardPointers: Option[Map[Int, String]] = {
       val shardIdx = body.indexOf(shardedTag)
@@ -1485,7 +1473,7 @@ object EventStreams {
         .map(m => m.group(1).toInt -> m.group(2)).toMap)
     }
     /** bucket -> table-relative data files: sharded lists resolve each
-      * pointer's shard file, legacy inline lists parse the body.
+      * pointer's shard file, inline (backup-shape) lists parse the body.
       */
     lazy val live: Map[Int, Seq[String]] = shardPointers match {
       case Some(ptrs) =>
@@ -2324,7 +2312,7 @@ object EventStreams {
     * set — the READ half of the delta-merge design. The winner per key
     * is the row with the greatest `(version, commit)` pair, where the
     * commit ordinal is recovered from the file path's `gen_<batchId>/`
-    * segment (pre-manifest legacy files rank as commit -1): version
+    * segment (a file without one ranks as commit -1): version
     * dominates, commit order breaks version ties deterministically in
     * favor of the later commit — the same winner an eager merge chain
     * produces, made explicit for ties (max_by over a union leaves a
@@ -2341,7 +2329,8 @@ object EventStreams {
     // commit ordinal: a restored file's `g<seq>-` filename marker wins
     // (restore re-homes files under ITS commit's gen dir — the marker
     // carries the original), else the `gen_<seq>/` path segment, else
-    // -1 (pre-manifest legacy adoption)
+    // -1 (no committed file lacks both since the format floor; the arm
+    // stays so the planned expression is unchanged)
     val mark = regexp_extract(input_file_name(), "/g(-?\\d+)-[^/]*$", 1)
     val seq = regexp_extract(input_file_name(), "gen_(-?\\d+)/", 1)
     val withCommit = df.withColumn("__commit",
@@ -2357,7 +2346,7 @@ object EventStreams {
 
   /** A file's commit ordinal as recorded in its path: the `g<seq>-`
     * filename marker (restored files) wins over the `gen_<seq>/`
-    * segment; pre-manifest legacy adoption reads as -1. The same
+    * segment; a path with neither reads as -1. The same
     * resolution [[reconcileRows]] applies row-side.
     */
   private def fileOrdinal(rel: String): String = {
@@ -2440,8 +2429,8 @@ object EventStreams {
     * previous list's shard pointers (their content is unchanged by
     * contract — the merge/delete touched-bucket invariant), so a
     * 1-bucket merge into a million-file table commits exactly 2 tiny
-    * objects. `None` (compaction, restore, first commit, migration
-    * from a legacy inline list) writes every bucket's shard.
+    * objects. `None` (compaction, restore, first commit, a commit on
+    * an inline head) writes every bucket's shard.
     *
     * LOST-UPDATE GUARD + OPTIMISTIC REBASE: `base` (when supplied) is
     * the watermark the writer's `live` set was computed FROM (the
@@ -2862,7 +2851,7 @@ object EventStreams {
     ()
   }
 
-  /** A SELF-CONTAINED (legacy-inline-shape) manifest body — what
+  /** A SELF-CONTAINED (inline-shape) manifest body — what
     * backups commit: a sharded list points into the SOURCE table's
     * shards dir, which a backup must not depend on, and the inline
     * shape keeps a backup's commit a single file (manifest-LAST is the
@@ -2900,7 +2889,7 @@ object EventStreams {
     * rows are untouched (a pure rewrite — StreamingSpec asserts
     * read-back equality and the flag drop). Replayed batchIds no-op.
     * `nBuckets` must match the table's bucketing (the deleteFromTable
-    * convention); pre-manifest tables migrate via one merge first.
+    * convention); the table needs a committed manifest.
     *
     * CLUSTERING: `sortBy` sorts rows within each bucket before the
     * write and `maxRecordsPerFile` splits a bucket into several files —
@@ -2929,7 +2918,7 @@ object EventStreams {
     val head = manifestList(fs, table).lastOption.map(manifestAt(fs, _)).getOrElse(
       throw new IllegalArgumentException(
         s"$tableDir has no committed manifest; run one mergeBatchIntoTable " +
-          "(which migrates legacy layouts) before compacting"))
+          "before compacting"))
     if (head.batchId >= batchId) { // replayed batch
       sweepUnreferenced(fs, table, retainedFiles(fs, table, retain))
       return
@@ -4039,7 +4028,7 @@ object EventStreams {
     require(retain >= 1, s"retain must be >= 1, got $retain")
     val table = new Path(tableDir)
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (manifestList(fs, table).isEmpty) return 0 // pre-manifest: nothing committed to vacuum against
+    if (manifestList(fs, table).isEmpty) return 0 // nothing committed to vacuum against
     val deleted = sweepUnreferenced(fs, table, retainedFiles(fs, table, retain))
     if (keepManifests > 0) compactManifests(spark, tableDir, keepManifests)
     deleted
@@ -4138,8 +4127,8 @@ object EventStreams {
     }
     var inflightStaged = 0L
     val orphans = scala.collection.mutable.ArrayBuffer[String]()
-    // pre-manifest (legacy flat / bucket-dir) tables have no committed
-    // reference set — their unmigrated files are live data, not orphans
+    // a table without a committed manifest has no reference set to
+    // check its files against
     if (parsed.nonEmpty && fs.exists(table)) fs.listStatus(table).foreach { st =>
       val name = st.getPath.getName
       if (st.isFile && name.endsWith(".parquet")) orphans += name
@@ -4503,7 +4492,7 @@ object EventStreams {
     lists.foreach { p =>
       manifestAt(fs, p).shardPointers match {
         case Some(ptrs) => shardNames ++= ptrs.values
-        case None => out ++= readManifest(fs, p)._2.values.flatten // legacy inline
+        case None => out ++= readManifest(fs, p)._2.values.flatten // inline (backup shape)
       }
     }
     shardNames.result().foreach { name =>
@@ -4513,8 +4502,8 @@ object EventStreams {
   }
 
   /** Post-commit GC: delete every data file the retained manifests do
-    * not reference — superseded generation files, folded-in legacy flat
-    * files, stray staging leftovers — then drop emptied dirs. Runs
+    * not reference — superseded generation files, crash debris, stray
+    * root-level files — then drop emptied dirs. Runs
     * after EVERY commit over the whole table, so a crash between a
     * publish and its sweep self-heals on the next batch. Returns the
     * number of data files deleted (the [[vacuumUpsertTable]] report).
@@ -4536,10 +4525,8 @@ object EventStreams {
     fs.listStatus(table).foreach { st =>
       val name = st.getPath.getName
       if (st.isFile && name.endsWith(".parquet")) {
-        fs.delete(st.getPath, false) // legacy flat layout: folded into this commit
+        fs.delete(st.getPath, false) // a stray root-level file no manifest names
         deleted += 1
-      } else if (st.isDirectory && name.startsWith("_staging_")) {
-        fs.delete(st.getPath, true) // dir-swap-era staging leftovers
       } else if (st.isDirectory && name.startsWith("gen_") &&
           name.stripPrefix("gen_").toLongOption.exists(id =>
             inflight(id) ||
@@ -4606,12 +4593,9 @@ object EventStreams {
     * together — a replayed batchId is a no-op, a crash before the
     * publish leaves only an unreferenced generation that the replay
     * overwrites and the next sweep collects. No rename of data ever
-    * happens (the previous protocol's retire→rename→delete of the
-    * `current` dir had a reader-visible hole between the renames on
-    * object stores); tables from that older layout migrate
-    * transparently (their `current/sketch` + `current/_meta/max_batch`
-    * are adopted as the initial state and swept after the first
-    * manifest commit).
+    * happens. A directory holding the older `current/` layout (or any
+    * other manifest-less one) is refused before anything is written
+    * ([[requireFormatFloor]]).
     */
   def mergeSketchBatch(batch: DataFrame, itemCol: String, tableDir: String,
                        depth: Int, width: Int, batchId: Long,
@@ -4621,24 +4605,9 @@ object EventStreams {
     val table = new Path(tableDir)
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val committed = latestManifest(fs, table)
+    if (committed.isEmpty) requireFormatFloor(fs, table)
     if (committed.exists(_._1 >= batchId)) return // replayed batch: already folded
-    // legacy (pre-manifest) layout: the retire→rename protocol's state
-    // dir. Honor its watermark, adopt its sketch as the merge base.
-    val legacyCurrent = new Path(table, "current")
-    if (committed.isEmpty) {
-      val meta = new Path(legacyCurrent, "_meta/max_batch")
-      if (fs.exists(meta)) {
-        if (batchId <= readText(fs, meta).trim.toLong) return
-      }
-    }
-    val liveFiles: Seq[String] = committed.map(_._2.values.flatten.toSeq).getOrElse {
-      val legacyData = new Path(legacyCurrent, "sketch")
-      if (fs.exists(legacyData))
-        fs.listStatus(legacyData)
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .map(f => s"current/sketch/${f.getPath.getName}").toSeq
-      else Nil
-    }
+    val liveFiles = committed.map(_._2.values.flatten.toSeq).getOrElse(Nil)
     val batchSketch = graft.operators.Sketches.countMinSketch(
       batch.select(col(itemCol)), itemCol, depth, width)
     val merged =
@@ -4659,17 +4628,12 @@ object EventStreams {
     sweepUnreferenced(fs, table, newFiles.toSet)
     if (compactEvery > 0 && manifestList(fs, table).size > compactEvery)
       compactManifests(spark, tableDir, compactEvery)
-    // retire the legacy layout after the first manifest commit (its
-    // contents are folded into gen_<batchId> by now)
-    Seq(legacyCurrent, new Path(table, "_retiring")).foreach { p =>
-      if (fs.exists(p)) fs.delete(p, true)
-    }
   }
 
   /** The sketch the streaming sink maintains, as a [[graft.operators.Sketches]]
-    * frame (join with `cmsEstimate` for point estimates). Resolves the
-    * latest committed manifest (pre-manifest tables: the legacy
-    * `current/sketch` dir).
+    * frame (join with `cmsEstimate` for point estimates): the file the
+    * latest committed manifest names. A table with no committed sketch
+    * fails by name ([[noSnapshot]]).
     */
   def readSketchTable(spark: SparkSession, tableDir: String): DataFrame = {
     import org.apache.hadoop.fs.Path
@@ -4679,7 +4643,7 @@ object EventStreams {
       case Some((_, live)) if live.values.exists(_.nonEmpty) =>
         spark.read.parquet(
           live.values.flatten.map(r => new Path(table, r).toString).toSeq: _*)
-      case _ => spark.read.parquet(new Path(table, "current/sketch").toString)
+      case committed => noSnapshot(fs, table, committed.isDefined)
     }
   }
 

@@ -331,25 +331,6 @@ class StreamingSpec extends SparkSpec {
       else Seq.empty
     }
 
-  test("upsert sink migrates a legacy flat-layout table into buckets on first merge") {
-    val tableDir = Files.createTempDirectory("graft-upsert-legacy").toString
-    // simulate the pre-bucketed sink: keyed rows as root-level part files
-    Seq((1L, "OLD1", 1L), (2L, "OLD2", 1L)).toDF("k", "payload", "version")
-      .coalesce(1).write.mode("overwrite").parquet(tableDir)
-    val batch = Seq((2L, "NEW2", 5L), (3L, "NEW3", 1L)).toDF("k", "payload", "version")
-    EventStreams.mergeBatchIntoTable(batch, tableDir, Seq("k"), "version", 8, 0L)
-    // flat files retired — the directory is pure bucket layout again
-    val fs = new org.apache.hadoop.fs.Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val rootParquet = fs.listStatus(new org.apache.hadoop.fs.Path(tableDir))
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    assert(rootParquet.isEmpty, "legacy root-level part files must be folded into buckets")
-    // and no row was lost: untouched legacy key 1, upserted 2, new 3
-    val rows = EventStreams.readUpsertTable(spark, tableDir)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(rows === Map(1L -> "OLD1", 2L -> "NEW2", 3L -> "NEW3"))
-  }
-
   test("upsert sink: a read between staging and publish sees the previous snapshot") {
     val tableDir = Files.createTempDirectory("graft-upsert-iso").toString + "/t"
     def state() = EventStreams.readUpsertTable(spark, tableDir)
@@ -384,18 +365,15 @@ class StreamingSpec extends SparkSpec {
       Seq((1L, "a", 1L)).toDF("k", "payload", "version"),
       tableDir, Seq("k"), "version", 8, 0L)
     // plant the debris a crash-between-publish-and-sweep leaves behind:
-    // an orphaned generation and a dir-swap-era staging dir
+    // an orphaned generation
     val orphanGen = new java.io.File(tableDir, s"gen_99/${EventStreams.upsertBucketCol}=0")
     assert(orphanGen.mkdirs())
     java.nio.file.Files.writeString(
       orphanGen.toPath.resolve("part-junk.parquet"), "not parquet")
-    val staleStaging = new java.io.File(tableDir, "_staging_5")
-    assert(staleStaging.mkdirs())
     EventStreams.mergeBatchIntoTable(
       Seq((2L, "b", 1L)).toDF("k", "payload", "version"),
       tableDir, Seq("k"), "version", 8, 1L)
     assert(!new java.io.File(tableDir, "gen_99").exists(), "orphan generation not swept")
-    assert(!staleStaging.exists(), "stale staging dir not swept")
     assert(EventStreams.readUpsertTable(spark, tableDir)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap ===
       Map(1L -> "a", 2L -> "b"))
@@ -561,11 +539,10 @@ class StreamingSpec extends SparkSpec {
       Seq("a", "a", "b").toDF("tok"), "tok", tableDir, depth, width, 0L)
     val committed = sketchMap(EventStreams.readSketchTable(spark, tableDir))
     // simulate batch 1 dying after writing its generation but before
-    // publishing its manifest — plus a dir-swap-era staging leftover
+    // publishing its manifest
     val partialGen = new java.io.File(tableDir, "gen_1/sketch")
     assert(partialGen.mkdirs())
     java.nio.file.Files.writeString(partialGen.toPath.resolve("junk.parquet"), "junk")
-    assert(new java.io.File(tableDir, "_staging_7").mkdirs())
     // the unpublished generation is INVISIBLE: readers resolve manifests
     assert(sketchMap(EventStreams.readSketchTable(spark, tableDir)) === committed)
     // the replayed batch overwrites the partial generation, publishes,
@@ -575,39 +552,11 @@ class StreamingSpec extends SparkSpec {
     val full = sketchMap(Sketches.countMinSketch(
       Seq("a", "a", "b", "c").toDF("tok"), "tok", depth, width))
     assert(sketchMap(EventStreams.readSketchTable(spark, tableDir)) === full)
-    assert(!new java.io.File(tableDir, "_staging_7").exists())
     assert(!new java.io.File(tableDir, "gen_1/sketch/junk.parquet").exists())
     // a second replay of the committed batchId is a no-op
     EventStreams.mergeSketchBatch(
       Seq("zzz").toDF("tok"), "tok", tableDir, depth, width, 1L)
     assert(sketchMap(EventStreams.readSketchTable(spark, tableDir)) === full)
-  }
-
-  test("sketch sink migrates a legacy current/-layout table on first manifest commit") {
-    import graft.operators.Sketches
-    val tableDir = Files.createTempDirectory("graft-cms-legacy").toString + "/t"
-    val (depth, width) = (4, 32)
-    def sketchMap(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
-    // hand-build the old retire/rename protocol's layout: state under
-    // current/sketch, applied-batch watermark under current/_meta
-    Sketches.countMinSketch(Seq("a", "a", "b").toDF("tok"), "tok", depth, width)
-      .coalesce(1).write.parquet(s"$tableDir/current/sketch")
-    val meta = new java.io.File(tableDir, "current/_meta")
-    assert(meta.mkdirs())
-    java.nio.file.Files.writeString(meta.toPath.resolve("max_batch"), "0")
-    // the legacy watermark is honored: replaying batch 0 is a no-op
-    EventStreams.mergeSketchBatch(
-      Seq("IGNORED").toDF("tok"), "tok", tableDir, depth, width, 0L)
-    assert(sketchMap(EventStreams.readSketchTable(spark, tableDir)) ===
-      sketchMap(Sketches.countMinSketch(Seq("a", "a", "b").toDF("tok"), "tok", depth, width)))
-    // the first real merge folds the legacy state and retires the layout
-    EventStreams.mergeSketchBatch(
-      Seq("c").toDF("tok"), "tok", tableDir, depth, width, 1L)
-    assert(sketchMap(EventStreams.readSketchTable(spark, tableDir)) ===
-      sketchMap(Sketches.countMinSketch(
-        Seq("a", "a", "b", "c").toDF("tok"), "tok", depth, width)))
-    assert(!new java.io.File(tableDir, "current").exists())
   }
 
   test("upsert sink time travel: retained snapshots read as-of a batchId") {
@@ -675,33 +624,6 @@ class StreamingSpec extends SparkSpec {
       Seq((7L, "back", 9L)).toDF("k", "payload", "version"),
       tableDir, Seq("k"), "version", 8, 4L)
     assert(EventStreams.readUpsertTable(spark, tableDir).count() === 1)
-  }
-
-  test("deleteFromTable adopts pre-manifest buckets; flat legacy layout fails fast") {
-    def bucketOf(k: Long) = math.floorMod(
-      org.apache.spark.unsafe.hash.Murmur3_x86_32.hashLong(k, 42), 8)
-    // legacy __bucket=* layout (the dir-swap-era sink), no manifest
-    val dir = Files.createTempDirectory("graft-del-legacy").toString + "/t"
-    Seq((1L, "a")).toDF("k", "payload")
-      .write.parquet(s"$dir/__bucket=${bucketOf(1L)}")
-    Seq((2L, "b")).toDF("k", "payload")
-      .write.parquet(s"$dir/__bucket=${bucketOf(2L)}")
-    EventStreams.deleteFromTable(spark, dir, Seq(1L).toDF("k"), Seq("k"),
-      8, batchId = 0L)
-    val rows = EventStreams.readUpsertTable(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-    assert(rows === Seq((2L, "b"))) // adopted, deleted, untouched kept
-    // root-level FLAT legacy files cannot be safely deleted from — the
-    // sweep would remove unmigrated data — so the call must refuse
-    val flat = Files.createTempDirectory("graft-del-flat").toString + "/t"
-    Seq((3L, "c")).toDF("k", "payload").write.parquet(flat)
-    val ex = intercept[IllegalArgumentException] {
-      EventStreams.deleteFromTable(spark, flat, Seq(3L).toDF("k"), Seq("k"),
-        8, batchId = 0L)
-    }
-    assert(ex.getMessage.contains("flat pre-manifest layout"))
-    // and the refused call destroyed nothing
-    assert(spark.read.parquet(flat).count() === 1)
   }
 
   test("RAG index takedown: tombstoned chunks equal a from-scratch index over the retained corpus") {
@@ -1404,7 +1326,7 @@ class StreamingSpec extends SparkSpec {
     assert(fsck()("no_orphan_data")._1)
   }
 
-  test("sharded manifests: a 1-bucket merge commits O(1) metadata; legacy inline lists adopt on read") {
+  test("sharded manifests: 1-bucket merges commit O(1) metadata; compaction GCs shards") {
     val tableDir = Files.createTempDirectory("graft-shardman").toString + "/t"
     def merge(rows: Seq[(Long, String, Long)], id: Long) =
       EventStreams.mergeBatchIntoTable(rows.toDF("k", "payload", "version"),
@@ -1427,27 +1349,6 @@ class StreamingSpec extends SparkSpec {
     val rows = EventStreams.readUpsertTable(spark, tableDir)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(rows(1L) === "x" && rows(0L) === "p0" && rows.size === 64)
-    // legacy INLINE manifests (the pre-r13 single-file shape) adopt on
-    // read: rewrite the committed list inline, drop the shards dir
-    val live = EventStreams.tableManifest(spark, tableDir)
-    val inline = live.toSeq.sortBy(_._1).map { case (b, fls) =>
-      "\"" + b + "\":[" + fls.sorted.map(f => "\"" + f + "\"").mkString(",") + "]"
-    }.mkString("{\"batchId\":1,\"nBuckets\":8,\"buckets\":{", ",", "}}")
-    val fs = new org.apache.hadoop.fs.Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    new java.io.File(s"$tableDir/_manifests").listFiles()
-      .filter(_.getName.endsWith(".json"))
-      .foreach(f => if (f.getName != "00000000000000000001.json") f.delete())
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$tableDir/_manifests/00000000000000000001.json"), inline)
-    // the java.nio rewrite bypassed Hadoop's checksum layer: drop the
-    // stale .crc sidecars or the local FS refuses the re-read
-    new java.io.File(s"$tableDir/_manifests").listFiles()
-      .filter(_.getName.endsWith(".crc")).foreach(_.delete())
-    fs.delete(new org.apache.hadoop.fs.Path(s"$tableDir/_manifests/shards"), true)
-    assert(EventStreams.readUpsertTable(spark, tableDir)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap === rows)
-    // the first commit after adoption migrates to the sharded shape
     merge(Seq((2L, "y", 2L)), 2L)
     val latest = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$tableDir/_manifests/00000000000000000002.json")), "UTF-8")
@@ -1508,6 +1409,12 @@ class StreamingSpec extends SparkSpec {
       EventStreams.restoreUpsertTable(spark, s"$base/bak", s"$base/c", 11L)
     }
     assert(e.getMessage.contains("did NOT run"))
+    // the backup's head is the inline shape; a commit on it writes the
+    // sharded one and reads back whole
+    merge(s"$base/bak", Seq((3L, "q3b", 2L)), 12L)
+    assert(new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
+      s"$base/bak/_manifests/00000000000000000012.json")), "UTF-8").contains("\"shards\":{"))
+    assert(rows(s"$base/bak") === expected + (3L -> "q3b"))
   }
 
   test("backup dir reuse for a NEWER snapshot throws; a true replay still no-ops") {

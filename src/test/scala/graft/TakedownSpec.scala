@@ -17,6 +17,16 @@ class TakedownSpec extends SparkSpec {
       expr("transform(filter(split(text, ' '), x -> x <> ''), " +
         "t -> cast(pmod(xxhash64(t), 50) as int))").as("toks"))
 
+  /** The crash injection's repair: the flat (manifest-less) table is
+    * below the format floor, so it is deleted and rebuilt as a
+    * committed table of the same rows.
+    */
+  private def rebuildFlat(flat: String, docs: org.apache.spark.sql.DataFrame): Unit = {
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(flat))
+    EventStreams.mergeBatchIntoTable(docs.select(col("doc_id"), col("lang")),
+      flat, Seq("doc_id"), "doc_id", nBuckets = 4, batchId = 0L)
+  }
+
   test("one-call takedown: mid-walk crash + replay leaves every artifact from-scratch-equal") {
     val base = java.nio.file.Files.createTempDirectory("graft-takedown").toString
     val docs = mkDocs
@@ -42,9 +52,9 @@ class TakedownSpec extends SparkSpec {
     val preCodes = spark.read.parquet(s"$idx/codes")
       .select("vec_id", "cell", "codes").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Int](2).toSeq)).toSet
-    // the crash injection: a FLAT legacy keyed table — deleteFromTable
-    // fails fast on it by design (migration required), killing the walk
-    // after sequences/corpus/sigstore completed
+    // the crash injection: a FLAT manifest-less keyed table —
+    // deleteFromTable refuses it (below the format floor), killing the
+    // walk after sequences/corpus/sigstore completed
     val flat = s"$base/flat"
     docs.select(col("doc_id"), col("lang")).coalesce(1)
       .write.mode("append").parquet(flat)
@@ -56,16 +66,14 @@ class TakedownSpec extends SparkSpec {
         (flat, "doc_id", 4)),
       ragIndex = Some(rag), ivfPqIndex = Some(idx))
     // ---- crash mid-walk ---------------------------------------------
-    val ex = intercept[IllegalArgumentException] { request() }
-    assert(ex.getMessage.contains("flat pre-manifest layout"))
+    val ex = intercept[EventStreams.FormatFloorException] { request() }
+    assert(ex.getMessage.contains("flat root-level part files"))
     val after1 = Takedown.ledger(spark, ledgerDir, 10L).collect()
       .map(r => r.getString(0) -> r.getBoolean(1)).toMap
     assert(after1 === Map("sequences-seqs" -> false, "table-corpus" -> false,
       "table-sigstore" -> false))
-    // ---- repair (the documented migration) + replay SAME args -------
-    EventStreams.mergeBatchIntoTable(
-      docs.select(col("doc_id"), col("lang")).limit(0),
-      flat, Seq("doc_id"), "doc_id", nBuckets = 4, batchId = 0L)
+    // ---- repair (rebuild the flat table) + replay SAME args ----------
+    rebuildFlat(flat, docs)
     request()
     val after2 = Takedown.ledger(spark, ledgerDir, 10L).collect()
       .map(r => r.getString(0) -> r.getBoolean(1)).toMap
@@ -148,7 +156,7 @@ class TakedownSpec extends SparkSpec {
     val rag = s"$base/rag"
     Rag.indexShard(docs, rag, window = 8, stride = 4, dim = 16, nPlanes = 4,
       batchId = 0L)
-    // a flat legacy table makes ONE artifact fail while its siblings
+    // a flat manifest-less table makes ONE artifact fail while its siblings
     // run concurrently: the walk must settle every in-flight step (the
     // survivors' tokens land), rethrow, and leave _complete absent
     val flat = s"$base/flat"
@@ -161,17 +169,15 @@ class TakedownSpec extends SparkSpec {
       keyedTables = Seq((corpus, "doc_id", 4), (sigstore, "doc_id", 4),
         (flat, "doc_id", 4)),
       ragIndex = Some(rag), concurrency = 4)
-    val ex = intercept[IllegalArgumentException] { request() }
-    assert(ex.getMessage.contains("flat pre-manifest layout"))
+    val ex = intercept[EventStreams.FormatFloorException] { request() }
+    assert(ex.getMessage.contains("flat root-level part files"))
     val after1 = Takedown.ledger(spark, ledgerDir, 10L).collect()
       .map(r => r.getString(0) -> r.getBoolean(1)).toMap
     assert(after1 === Map("sequences-seqs" -> false, "table-corpus" -> false,
       "table-sigstore" -> false, "rag-rag" -> false),
       "every concurrent sibling of the failed artifact must settle and token")
     // repair + parallel replay completes exactly the remainder
-    EventStreams.mergeBatchIntoTable(
-      docs.select(col("doc_id"), col("lang")).limit(0),
-      flat, Seq("doc_id"), "doc_id", nBuckets = 4, batchId = 0L)
+    rebuildFlat(flat, docs)
     request()
     val after2 = Takedown.ledger(spark, ledgerDir, 10L).collect()
       .map(r => r.getString(0) -> r.getBoolean(1)).toMap
@@ -333,7 +339,7 @@ class TakedownSpec extends SparkSpec {
     val idx = s"$base/idx"
     Similarity.buildIvfPqIndex(
       sources.Tables.embeddings(spark, "/root/testdata/sf0.001"), idx)
-    // the crash injection (flat legacy table): the walk completes
+    // the crash injection (flat manifest-less table): the walk completes
     // sequences + corpus, fails on flat, never reaches rag/ivfpq
     val flat = s"$base/flat"
     docs.select(col("doc_id"), col("lang")).coalesce(1)
@@ -355,17 +361,16 @@ class TakedownSpec extends SparkSpec {
     val preAt = auditAt(10L)
     assert(preAt("sequences-seqs") > 0 && preAt("table-corpus") > 0 &&
       preAt("rag-rag") > 0 && preAt("ivfpq-idx") > 0)
-    intercept[IllegalArgumentException] { request() } // crash mid-walk
+    val ex = intercept[EventStreams.FormatFloorException] { request() } // crash mid-walk
+    assert(ex.getMessage.contains("flat root-level part files"))
     // the LATEST audit is now MIXED — it neither confirms nor denies
     val mid = auditLatest()
     assert(mid("sequences-seqs") === 0L && mid("table-corpus") === 0L)
     assert(mid("rag-rag") > 0L && mid("ivfpq-idx") > 0L)
     // the PINNED audit is stable through the walk: identical to before
     assert(auditAt(10L) === preAt)
-    // repair + replay to completion (the documented migration)
-    EventStreams.mergeBatchIntoTable(
-      docs.select(col("doc_id"), col("lang")).limit(0),
-      flat, Seq("doc_id"), "doc_id", nBuckets = 4, batchId = 0L)
+    // repair (rebuild the flat table) + replay to completion
+    rebuildFlat(flat, docs)
     request()
     // post-walk: the pre pin STILL reads the pre-request world; a pin
     // past the request's id window reads the post-request world

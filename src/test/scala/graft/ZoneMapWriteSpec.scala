@@ -188,16 +188,6 @@ class ZoneMapWriteSpec extends SparkSpec {
     }
   }
 
-  test("the legacy flat-layout fold records the zone maps of the files it writes") {
-    withZone("Asia/Kolkata") {
-      val t = tableDir("graft-zmw-flat")
-      rows(0L until 40L, 0L).coalesce(2).write.parquet(t) // pre-bucketed flat layout
-      merge(t, rows(30L until 50L, 1L), 1L)
-      assertParity(t, 1L)
-      assert(new File(t).listFiles.forall(f => !f.getName.endsWith(".parquet")))
-    }
-  }
-
   test("an unsupported stats type fails with the writer's message before any file is written") {
     val t = tableDir("graft-zmw-bad")
     val df = Seq((1L, Seq(1, 2), 0L), (2L, Seq(3), 0L)).toDF("k", "arr", "v")
